@@ -231,7 +231,9 @@ def main() -> None:
 
     # ---- adversarial skew replay (separate section: NOT in `value`) ------
     # one repo forced to 20% of the stream — the monorepo hot-key shape.
-    # Evidence that AQE skew-join splitting + the merge path's salting keep
+    # Evidence that AQE skew-join splitting + the merge path's shape (no
+    # salting: the batch is reduced map-side to one winner per key, then
+    # the MERGE is ONE exchange partitioned by storage bucket) keep
     # throughput near the uniform-skew baseline instead of serializing on
     # one reducer.
     skew: dict[str, float] = {}

@@ -27,7 +27,7 @@ Pipeline (each stage cites its reference analog):
    and rewritten (copy-on-write); commit is one atomic snapshot carrying
    data + HWM + cursor (exactly-once; mixpanel.rb:34-46 made atomic).
 
-Per batch exactly three jobs are scheduled: (1) a column-pruned
+Per batch three ACTIONS run: (1) a column-pruned
 HWM/metrics pre-aggregation over (source_partition, event_seq), (2) a
 combined discovery pass (touched buckets + new prop keys) over a NARROW
 latest-wins twin — key + order + props only, no content (the order
@@ -37,7 +37,10 @@ job's exchange is a straight bytes win), (3) the merge write, whose
 union is repartitioned by storage bucket ONCE so the latest-wins
 aggregation and the write layout share a single exchange. The winners
 DataFrame is deliberately NOT persisted: a columnar cache of map-typed
-rows costs more (build + GC) than the narrow recompute.
+rows costs more (build + GC) than the narrow recompute. Under AQE each
+exchange of an action is a Spark job of its own, so the three actions
+schedule 8 jobs per batch (measured by ``perfbench/run.py --workload
+replay_tail --trace 1``: 2k-event batches into a 16-bucket table).
 """
 
 from __future__ import annotations

@@ -68,7 +68,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.lake import ConcurrentCommitError, LakeTable, lake_buckets_of
-from .similarity import _cosine_n, _norm, _rebalance, _to_double
+from .dedup import _rebalance
+from .similarity import _cosine_n, _norm, _to_double
 
 __all__ = ["IncrementalANN"]
 
@@ -107,24 +108,6 @@ _DELETED_SCHEMA = T.StructType(
         T.StructField("batch_seq", T.LongType()),
     ]
 )
-
-
-def _argmax_centroid(scored: DataFrame) -> DataFrame:
-    """(id, centroid_id, cos_r) -> best centroid per id, as a partial-agg
-    max-of-struct (map-side combine; same pattern as similarity.ivf_assign
-    — never a window over the n x n_centroids cross-score)."""
-    w = F.max(
-        F.struct(
-            F.col("cos_r").alias("c"),
-            (-F.col("centroid_id")).alias("negid"),
-            F.col("centroid_id").alias("cid"),
-        )
-    ).alias("_w")
-    return (
-        scored.groupBy("id")
-        .agg(w)
-        .select("id", F.col("_w.cid").alias("cluster"), F.col("_w.c").alias("cos_r"))
-    )
 
 
 class IncrementalANN:
@@ -231,19 +214,42 @@ class IncrementalANN:
         )
 
     def _score_against_centroids(self, vecs: DataFrame) -> DataFrame:
-        """(id, v) -> (id, v, cluster, cos_r): broadcast-centroid score +
-        one partial-agg argmax."""
-        cent = self._centroids().select(
-            "centroid_id", "_cv", _norm("_cv").alias("_cn")
+        """(id, v, ...) -> the same rows plus (cluster, cos_r).
+
+        The centroids travel as ONE broadcast row holding their array;
+        each vector folds against every centroid in its own row and keeps
+        the max-of-struct (cos_r, -centroid_id) — the argmax of
+        similarity.ivf_assign with the same cosine expression and the
+        same tie-break, but no shuffle and no join back to the vectors."""
+        cents = self._centroids().coalesce(1).agg(
+            F.collect_list(
+                F.struct(
+                    F.col("centroid_id").alias("cid"),
+                    F.col("_cv").alias("cv"),
+                    _norm("_cv").alias("cn"),
+                )
+            ).alias("_cents")
         )
-        vn = vecs.select("id", "v", _norm("v").alias("_vn"))
-        scored = F.broadcast(cent).join(vn).select(
-            "id", "centroid_id",
-            F.round(
-                _cosine_n("v", "_cv", F.col("_vn"), F.col("_cn")), 4
-            ).alias("cos_r"),
+        best = F.array_max(
+            F.transform(
+                "_cents",
+                lambda c: F.struct(
+                    F.round(_cosine_n("v", c["cv"], F.col("_vn"), c["cn"]), 4).alias("c"),
+                    (-c["cid"]).alias("negid"),
+                    c["cid"].alias("cid"),
+                ),
+            )
         )
-        return _argmax_centroid(scored).join(vecs, "id")
+        return (
+            vecs.withColumn("_vn", _norm("v"))
+            .crossJoin(F.broadcast(cents))
+            .withColumn("_w", best)
+            .select(
+                *vecs.columns,
+                F.col("_w.cid").alias("cluster"),
+                F.col("_w.c").alias("cos_r"),
+            )
+        )
 
     def _reassign_all(self) -> None:
         """Rewrite every stored vector's assignment against the CURRENT
@@ -274,9 +280,7 @@ class IncrementalANN:
             .join(self.deleted.read().select("id"), "id", "left_anti")
             .select("id", "v", "batch_seq")
         )
-        newassign = self._score_against_centroids(corpus.select("id", "v")).join(
-            corpus.select("id", "batch_seq"), "id"
-        )
+        newassign = self._score_against_centroids(corpus)
         self.vectors.commit_rewrite(
             newassign.select(
                 "id", "v", "cluster", "cos_r", "batch_seq",
@@ -347,20 +351,19 @@ class IncrementalANN:
         """Assign + append one batch of vectors; returns rows ingested.
 
         O(batch): a bucket-pruned known-id anti-join (only the id-index
-        files the batch's own ids hash into are opened), broadcast-
-        centroid score of the new vectors only, one partial-agg argmax,
-        one append commit per table (new files only)."""
+        files the batch's own ids hash into are opened), a per-row score
+        of the new vectors against the broadcast centroids, one append
+        commit per table (new files only)."""
         ran_recovery = self.recover()
         batch_seq = int(self.vectors.properties.get("batch_seq", 0)) + 1
         vec_v = self.vectors.version
 
-        vecs = _rebalance(batch).select(
-            F.col(id_col).cast("long").alias("id"), _to_double(vec_col).alias("v")
-        )
         # idempotence: drop redelivered ids via the id-bucketed index —
         # the scan opens only the lake buckets the BATCH's ids hash into,
         # never the whole corpus' id files
-        batch_id_buckets = lake_buckets_of(vecs, self.ids, "id")
+        batch_id_buckets = lake_buckets_of(
+            batch.select(F.col(id_col).cast("long").alias("id")), self.ids, "id"
+        )
         ids_snap = self.ids.snapshot()
         # known = stored ids UNION deleted ids (same num_buckets, so one
         # pruned bucket list serves both): a redelivered DELETED vector —
@@ -368,8 +371,9 @@ class IncrementalANN:
         known = self.ids.read(buckets=batch_id_buckets).select("id").unionByName(
             self.deleted.read(buckets=batch_id_buckets).select("id")
         )
-        vecs = vecs.join(known, "id", "left_anti").localCheckpoint(eager=True)
-        n = vecs.count()
+        vecs = _rebalance(batch).select(
+            F.col(id_col).cast("long").alias("id"), _to_double(vec_col).alias("v")
+        ).join(known, "id", "left_anti")
         if stats is not None:
             stats.update(
                 recovered=ran_recovery,
@@ -380,17 +384,14 @@ class IncrementalANN:
                 ids_lake_buckets_read=len(batch_id_buckets),
                 ids_lake_buckets_total=self.ids.num_buckets,
             )
-        if n == 0:
-            # empty (or fully-redelivered) batch: commit NOTHING — in
-            # particular never train centroids from it (an empty training
-            # corpus would freeze trained=True with zero centroids and
-            # poison every later ingest)
-            if stats is not None:
-                stats.update(n_new=0)
-            return 0
-
         if not bool(self.cent.properties.get("trained")):
-            self._train_from(vecs)
+            # the first NON-EMPTY batch seeds the centroids; it is read
+            # twice (training, scoring), so it is materialized first. An
+            # empty training corpus would freeze trained=True with zero
+            # centroids and poison every later ingest.
+            vecs = vecs.localCheckpoint(eager=True)
+            if vecs.count():
+                self._train_from(vecs)
         cent_v = self.cent.version
         epoch = int(self.cent.properties.get("epoch", 0))
 
@@ -399,6 +400,14 @@ class IncrementalANN:
             F.lit(batch_seq).cast("long").alias("batch_seq"),
             F.col("cluster").alias("bucket"),
         ).localCheckpoint(eager=True)
+        # a count over materialized rows in one task: no exchange, one job
+        n = out.coalesce(1).count()
+        if n == 0:
+            # empty (or fully-redelivered) batch: commit NOTHING
+            if stats is not None:
+                stats.update(n_new=0)
+            return 0
+
         # a retrain that committed while we were scoring would make these
         # assignments stale — refuse to publish them (the epoch stamp +
         # recover() heal the residual race between this check and the
@@ -422,8 +431,7 @@ class IncrementalANN:
             expected_version=vec_v,
         )
         self.ids.commit_append(
-            vecs.select("id", F.lit(batch_seq).cast("long").alias("batch_seq"))
-            .withColumn("bucket", self.ids.bucket_expr("id")),
+            out.select("id", "batch_seq").withColumn("bucket", self.ids.bucket_expr("id")),
             properties={"batch_seq": batch_seq},
             expected_version=self.ids.version,
         )
@@ -687,9 +695,7 @@ class IncrementalANN:
                         "n_centroids": nc},
             expected_version=self.cent.version,
         )
-        newassign = self._score_against_centroids(corpus.select("id", "v")).join(
-            corpus.select("id", "batch_seq"), "id"
-        )
+        newassign = self._score_against_centroids(corpus)
         self.vectors.commit_rewrite(
             newassign.select(
                 "id", "v", "cluster", "cos_r", "batch_seq",

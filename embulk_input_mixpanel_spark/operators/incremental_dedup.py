@@ -28,9 +28,10 @@ atomic commits, time travel, bucket-pruned reads):
   memory, the store-level analog of the CDC table's op='D' tombstones.
 
 Cost model per batch (the 100 TB story): shingling/hashing is O(batch)
-(the expensive text explosion never re-touches old docs); the index join
-is one hash join keyed (band, bk) against bucket-pruned index files; the
-exact rescore reads only candidate docs' signature rows. Appends are
+(the expensive text explosion never re-touches old docs); the index
+lookup is one groupBy keyed (band, bk) over the batch's band rows and the
+matching rows of bucket-pruned index files; the exact rescore reads only
+candidate docs' signature rows. Appends are
 :meth:`LakeTable.commit_append` — new files only, never a copy-on-write
 of history, so commit cost is O(batch) regardless of corpus size.
 
@@ -330,12 +331,6 @@ class IncrementalDeduper:
                 ran = True
         return ran
 
-    def _lake_buckets_of(self, df: DataFrame, table: LakeTable, *cols: str) -> list[int]:
-        """Distinct lake-bucket ids the given key columns hash into —
-        a driver collect of at most ``num_buckets`` integers, used to
-        prune store reads to the files the batch can possibly match."""
-        return lake_buckets_of(df, table, *cols)
-
     def maintain(
         self, max_files_per_bucket: int = 8, keep_snapshots: int = 10
     ) -> dict[str, int]:
@@ -397,7 +392,7 @@ class IncrementalDeduper:
             ).distinct()
         del_v = self.deleted.version
         seq = int(self.deleted.properties.get("batch_seq", 0)) + 1
-        pruned = self._lake_buckets_of(want, self.deleted, "id")
+        pruned = lake_buckets_of(want, self.deleted, "id")
         already = self.deleted.read(buckets=pruned).select("id")
         fresh = want.join(already, "id", "left_anti").localCheckpoint(eager=True)
         n = fresh.count()
@@ -450,7 +445,7 @@ class IncrementalDeduper:
             # being silently erased by the stale full-bucket rewrite (the
             # same loss mode ADVICE r4 flagged for ANN's reassign)
             buck_v = self.buckets.version
-            sig_buckets = self._lake_buckets_of(targets, self.sigs, "id")
+            sig_buckets = lake_buckets_of(targets, self.sigs, "id")
             dsigs = (
                 self.sigs.read(buckets=sig_buckets)
                 .join(targets, "id", "left_semi")
@@ -458,7 +453,7 @@ class IncrementalDeduper:
             )
             # 1) band index (needs the sigs mh columns, so it goes first)
             keys = self._band_index_rows(dsigs.drop("batch_seq"), 0).select("band", "bk")
-            idx_buckets = self._lake_buckets_of(keys, self.buckets, "band", "bk")
+            idx_buckets = lake_buckets_of(keys, self.buckets, "band", "bk")
             if idx_buckets:
                 keep = self.buckets.read(buckets=idx_buckets).join(
                     targets, "id", "left_anti"
@@ -551,7 +546,7 @@ class IncrementalDeduper:
         the union of those batches' pairs touching the given docs."""
         empty = self.spark.createDataFrame([], PAIR_SCHEMA)
         ids = docs.select(F.col(id_col).cast("long").alias("id")).distinct()
-        id_lake_buckets = self._lake_buckets_of(ids, self.sigs, "id")
+        id_lake_buckets = lake_buckets_of(ids, self.sigs, "id")
         mine = (
             self.sigs.read(buckets=id_lake_buckets)
             .join(ids, "id", "left_semi")
@@ -573,7 +568,7 @@ class IncrementalDeduper:
         # stored index (includes the batch itself: it's stored now, so
         # new-new and old-new candidates both fall out of one expansion)
         nb = self._band_index_rows(mine.drop("batch_seq"), 0).select("band", "bk")
-        key_lake_buckets = self._lake_buckets_of(nb, self.buckets, "band", "bk")
+        key_lake_buckets = lake_buckets_of(nb, self.buckets, "band", "bk")
         key_set = nb.distinct()
         stored = (
             self.buckets.read(buckets=key_lake_buckets)
@@ -599,7 +594,7 @@ class IncrementalDeduper:
         cids = cand.select(F.col("id_a").alias("id")).unionByName(
             cand.select(F.col("id_b").alias("id"))
         ).distinct()
-        cand_lake_buckets = self._lake_buckets_of(cids, self.sigs, "id")
+        cand_lake_buckets = lake_buckets_of(cids, self.sigs, "id")
         csigs = (
             self.sigs.read(buckets=cand_lake_buckets)
             .join(cids, "id", "left_semi")
@@ -655,7 +650,7 @@ class IncrementalDeduper:
         df_v = self.dfreq.version if self.dfreq is not None else None
 
         ids = docs.select(F.col(id_col).cast("long").alias("id"))
-        id_lake_buckets = self._lake_buckets_of(ids, self.sigs, "id")
+        id_lake_buckets = lake_buckets_of(ids, self.sigs, "id")
         # known = stored ids UNION deleted ids (deleted shares sigs'
         # num_buckets, so the same pruned bucket list serves both reads
         # and the takedown mask costs zero extra driver jobs); a
@@ -705,11 +700,12 @@ class IncrementalDeduper:
         ).localCheckpoint(eager=True)
         t_sig = time.monotonic()
 
-        # band keys of the batch; ONE fused driver job computes n_new AND
-        # the band-key lake-bucket set (formerly a count + a collect)
+        # band keys of the batch; one aggregate over the checkpointed
+        # signatures gives n_new (one band-0 row per document) AND the
+        # band-key lake-bucket set (2 jobs under AQE: partial + final)
         newb = self._band_index_rows(perdoc, batch_seq)
         fused = newb.agg(
-            F.countDistinct("id").alias("n"),
+            F.count(F.when(F.col("band") == 0, 1)).alias("n"),
             F.collect_set(self.buckets.bucket_expr("band", "bk")).alias("bks"),
         ).first()
         n_new = int(fused["n"])
@@ -722,37 +718,42 @@ class IncrementalDeduper:
                 stats.update(n_new=0, recovered=ran_recovery)
             return empty
 
-        new_keys = newb.groupBy("band", "bk").agg(F.collect_set("id").alias("new_ids"))
-
         # old side: prune the band index to the lake buckets the batch's
-        # keys hash into, SEMI-JOIN the batch's key set BEFORE aggregating
-        # (the aggregate must see O(batch-matching) index rows, never the
-        # whole stored index — groupBy-then-join would re-aggregate the
-        # full corpus index every batch), then ONE hash join on (band, bk)
+        # keys hash into and SEMI-JOIN the batch's key set BEFORE
+        # aggregating (the aggregate must see O(batch-matching) index
+        # rows, never the whole stored index — groupBy-then-join would
+        # re-aggregate the full corpus index every batch); then ONE
+        # groupBy (band, bk) over the batch's rows and the matching index
+        # rows collects both id lists
         snap_files = self.buckets.snapshot().files
-        new_key_set = new_keys.select("band", "bk")
         stored = (
             self.buckets.read(buckets=key_lake_buckets)
-            .join(F.broadcast(new_key_set), ["band", "bk"], "left_semi")
+            .select("band", "bk", "id")
+            .join(F.broadcast(newb.select("band", "bk")), ["band", "bk"], "left_semi")
+        )
+        is_new = F.col("is_new")
+        combined = (
+            newb.select("band", "bk", "id", F.lit(True).alias("is_new"))
+            .unionByName(stored.withColumn("is_new", F.lit(False)))
             .groupBy("band", "bk")
-            .agg(F.collect_set("id").alias("old_ids"))
-        )
-        combined = new_keys.join(stored, ["band", "bk"], "left").select(
-            "band", "bk", "new_ids",
-            F.coalesce(F.col("old_ids"), F.expr("CAST(array() AS ARRAY<BIGINT>)")).alias("old_ids"),
-        )
-        # bucket-size belt over the COMBINED occupancy (same rationale as
-        # dedup.lsh_candidate_pairs — a mega-bucket is a mass-duplicate
-        # signal, not a candidate source)
-        combined = combined.filter(
-            (F.size("new_ids") + F.size("old_ids")) <= self.max_bucket_size
+            .agg(
+                F.collect_set(F.when(is_new, F.col("id"))).alias("new_ids"),
+                F.collect_set(F.when(~is_new, F.col("id"))).alias("old_ids"),
+            )
+            # bucket-size belt over the COMBINED occupancy (same rationale
+            # as dedup.lsh_candidate_pairs — a mega-bucket is a
+            # mass-duplicate signal, not a candidate source)
+            .filter((F.size("new_ids") + F.size("old_ids")) <= self.max_bucket_size)
         )
         new_new = (
             combined.filter(F.size("new_ids") >= 2)
             .select(F.explode("new_ids").alias("id_a"), "new_ids")
             .select("id_a", F.explode("new_ids").alias("id_b"))
             .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", F.lit(None).cast("long").alias("oid"))
         )
+        # oid: the stored endpoint of an old-new pair (null for new-new);
+        # a pair's oid is a function of the pair, so it rides the distinct
         old_new = (
             combined.filter(F.size("old_ids") >= 1)
             .select(F.explode("old_ids").alias("oid"), "new_ids")
@@ -760,29 +761,37 @@ class IncrementalDeduper:
             .select(
                 F.least("oid", "nid").alias("id_a"),
                 F.greatest("oid", "nid").alias("id_b"),
+                "oid",
             )
         )
-        # eager checkpoint: the candidate set feeds BOTH the old-id bucket
-        # collect below and the rescore join — without it the whole index
-        # join + explosion subtree executes twice (final stages re-run
-        # even with shuffle-stage reuse; measured ~25% of the small-batch
-        # fixed cost)
+        # eager checkpoint: the candidate set feeds BOTH the driver
+        # aggregate below and the rescore join — without it the whole
+        # index join + explosion subtree executes twice
         cand = new_new.unionByName(old_new).distinct().localCheckpoint(eager=True)
+        # one aggregate over the checkpoint: candidate count AND the sigs
+        # lake buckets of the stored endpoints
+        oid = F.col("oid")
+        cagg = cand.agg(
+            F.count("*").alias("n"),
+            F.collect_set(F.when(oid.isNotNull(), self.sigs.bucket_expr("oid"))).alias("b"),
+        ).first()
+        n_candidates = int(cagg["n"])
+        old_lake_buckets = sorted(int(b) for b in cagg["b"])
+        t_cand = time.monotonic()
 
         # exact rescore: shingle sets from the in-flight batch plus a
-        # bucket-pruned read of ONLY the candidate old docs' sig rows
-        old_ids = cand.select(F.col("id_a").alias("id")).unionByName(
-            cand.select(F.col("id_b").alias("id"))
-        ).join(perdoc.select("id"), "id", "left_anti").distinct()
-        old_lake_buckets = self._lake_buckets_of(old_ids, self.sigs, "id")
-        t_cand = time.monotonic()
-        # anti-join the takedown registry (pruned by the same candidate
-        # buckets): a not-yet-purged deleted doc still has sig rows, and
-        # pairs against it must not be emitted — without its sig row the
-        # candidate dies at the inner rescore join below
+        # bucket-pruned read of ONLY the candidate old docs' sig rows;
+        # anti-join the takedown registry (pruned by the same buckets): a
+        # not-yet-purged deleted doc still has sig rows, and pairs against
+        # it must not be emitted — without its sig row the candidate dies
+        # at the inner rescore join below
+        # (the broadcast carries at most one long per candidate pair; the
+        # checkpoint's size is unknown to the planner, which would
+        # otherwise shuffle both sides before AQE switches to a broadcast)
+        old_ids = cand.select(oid.alias("id")).filter(F.col("id").isNotNull())
         old_sigs = (
             self.sigs.read(buckets=old_lake_buckets)
-            .join(old_ids, "id", "left_semi")
+            .join(F.broadcast(old_ids), "id", "left_semi")
             .join(
                 self.deleted.read(buckets=old_lake_buckets).select("id"),
                 "id", "left_anti",
@@ -790,17 +799,18 @@ class IncrementalDeduper:
             .select("id", "shs")
         )
         allsigs = perdoc.select("id", "shs").unionByName(old_sigs)
-        a = allsigs.select(F.col("id").alias("id_a"), F.col("shs").alias("shs_a"))
-        b = allsigs.select(F.col("id").alias("id_b"), F.col("shs").alias("shs_b"))
-        inter = F.size(F.array_intersect("shs_a", "shs_b"))
+        # both sides join the SAME frame, so their broadcasts are one
+        # exchange (reused), not two builds of the union
+        sa, sb = allsigs.alias("sa"), allsigs.alias("sb")
+        inter = F.size(F.array_intersect("sa.shs", "sb.shs"))
         pairs = (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
+            cand.join(sa, F.col("id_a") == F.col("sa.id"))
+            .join(sb, F.col("id_b") == F.col("sb.id"))
             .select(
                 "id_a",
                 "id_b",
                 F.round(
-                    inter / (F.size("shs_a") + F.size("shs_b") - inter), 6
+                    inter / (F.size("sa.shs") + F.size("sb.shs") - inter), 6
                 ).alias("jaccard"),
             )
             .filter(F.col("jaccard") >= self.threshold)
@@ -847,7 +857,7 @@ class IncrementalDeduper:
                 n_new=n_new,
                 batch_seq=batch_seq,
                 recovered=ran_recovery,
-                n_candidates=cand.count(),  # cheap: cand is checkpointed
+                n_candidates=n_candidates,
                 index_files_total=total_files,
                 index_files_read=read_files,
                 index_lake_buckets_read=len(key_lake_buckets),

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _rebalance
+
 __all__ = [
     "cosine",
     "brute_force_topk",
@@ -34,16 +36,6 @@ __all__ = [
 def _to_double(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
-
-
-def _rebalance(df: DataFrame) -> DataFrame:
-    """Widen narrow inputs before fold-heavy vector work (a small corpus
-    file often scans as 1 partition, serializing the per-row dot-product
-    folds). No-op at real scale; see operators/dedup.py::_rebalance."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -63,10 +55,11 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b))
 
 
-def _cosine_n(a: str, b: str, na: Column, nb: Column) -> Column:
+def _cosine_n(a: str | Column, b: str | Column, na: Column, nb: Column) -> Column:
     """Cosine with the self-dot-products precomputed ONCE per row.
 
-    ``a``/``b`` are column NAMES (materialized projections);
+    ``a``/``b`` are column names (materialized projections) or lambda
+    variables;
     ``na``/``nb`` must be the exact ``_dot(x, x)`` of the same arrays,
     carried from the row's projection — the expression tree is then
     bit-identical to :func:`cosine` (same left-to-right fold, same
@@ -74,7 +67,8 @@ def _cosine_n(a: str, b: str, na: Column, nb: Column) -> Column:
     instead of once per scored PAIR (guide §1.2 per-task work: a pair
     join scores |candidates| pairs, so inline norms cost 2 extra
     64-element folds per pair — ~2/3 of the cosine arithmetic)."""
-    return _dot(F.col(a), F.col(b)) / F.sqrt(na * nb)
+    a, b = (F.col(x) if isinstance(x, str) else x for x in (a, b))
+    return _dot(a, b) / F.sqrt(na * nb)
 
 
 def _norm(v: str) -> Column:

@@ -7,8 +7,11 @@ harness, and `spark-submit` jobs share one configuration story:
   the DuckDB oracle and to the reference's tz-normalized epochs
   (reference: lib/embulk/input/service/base_service.rb:43-51).
 - **AQE on** (coalesce partitions + skew-join splitting) — the runtime
-  half of the skew story for the MERGE shuffle; explicit salting in
-  ``operators.merge`` is the planning half.
+  half of the skew story. ``operators.merge`` does no salting: the batch
+  is first reduced to one winner per key by a partial (map-side)
+  max-of-struct aggregation, so a hot key crosses that shuffle as one row
+  per map task; the MERGE itself is ONE exchange, partitioned by storage
+  bucket.
 - **Arrow on** — every Python-executed transform is a vectorized
   pandas/Arrow UDF (input_hint: "no per-row Python").
 - **Shuffle partitions scale with cores** — the same job must scale

@@ -277,7 +277,13 @@ class LakeTable:
             files = [f for b, fl in snap.files.items() if b in want for f in fl]
         schema = snap.schema
         if not files:
-            df = self.spark.createDataFrame([], schema)
+            # an empty relation the optimizer can see through: a join
+            # against it folds away, and its size estimate allows a
+            # broadcast (a createDataFrame([]) relation has unknown size,
+            # which forces a shuffle join on every side it touches)
+            df = self.spark.range(0).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+            )
         else:
             paths = [os.path.join(self.path, f) for f in files]
             df = self.spark.read.schema(schema).parquet(*paths)

@@ -1,0 +1,179 @@
+"""Spark job budgets of the incremental stores' per-batch work.
+
+Each test runs one 25-row ``add_batch`` on a store built from 500 rows,
+under its own Spark job group, and counts the jobs it scheduled with
+``statusTracker().getJobIdsForGroup``. Under AQE every exchange of an
+action is a job of its own, so the counts are a direct measure of the
+fixed cost a small batch pays. The pinned results are what the same
+inputs produced before the job budgets were cut (pair sets, ingest count
+and the new vectors' cluster assignments).
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import random
+import shutil
+import tempfile
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from embulk_input_mixpanel_spark.operators.dedup import _rebalance
+from embulk_input_mixpanel_spark.operators.incremental_ann import IncrementalANN
+from embulk_input_mixpanel_spark.operators.incremental_dedup import IncrementalDeduper
+
+N_BASE = 500
+N_BATCH = 25
+NEW_ID = 1_000_000
+
+DEDUP_JOB_BUDGET = 25
+ANN_JOB_BUDGET = 10
+
+# (id_a, id_b, jaccard) returned for the 25-document batch below
+EXPECTED_PAIRS = {
+    (12, 1000005): 1.0, (18, 1000004): 1.0, (20, 1000006): 1.0,
+    (26, 1000013): 1.0, (36, 1000023): 1.0, (40, 1000008): 1.0,
+    (53, 1000014): 1.0, (67, 1000019): 1.0, (90, 1000024): 1.0,
+    (120, 1000003): 1.0, (126, 1000021): 1.0, (160, 1000001): 1.0,
+    (168, 1000020): 1.0, (189, 1000011): 1.0, (191, 1000007): 1.0,
+    (210, 1000010): 1.0, (213, 1000000): 1.0, (255, 1000016): 1.0,
+    (267, 1000015): 1.0, (381, 1000009): 1.0, (394, 1000022): 0.981818,
+    (417, 1000012): 0.965517, (449, 1000017): 0.972973, (482, 1000002): 1.0,
+    (496, 1000018): 1.0,
+}
+# sha256 of the sorted (id, cluster, cos_r) rows the ANN batch stored
+EXPECTED_ANN_DIGEST = "8591d3471a227a1c79d6dffc2e87a32dfa6859e5ed3265aedc76846ef36563a4"
+
+
+def _corpus(seed: int = 5):
+    rng = random.Random(seed)
+    vocab = ["".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 8)))
+             for _ in range(300)]
+    docs = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(30, 60))))
+            for i in range(N_BASE)]
+    # the batch: copies of stored documents under new ids, the last few
+    # with one extra word (near, not exact, duplicates)
+    src = rng.sample(range(N_BASE), N_BATCH)
+    batch = [
+        (NEW_ID + j, docs[s][1] + (f" {rng.choice(vocab)}" if j % 5 == 2 and j > 10 else ""))
+        for j, s in enumerate(src)
+    ]
+    centers = [[rng.gauss(0, 1) for _ in range(16)] for _ in range(6)]
+
+    def vec(i):
+        c = centers[i % len(centers)]
+        return [x + 0.3 * rng.gauss(0, 1) for x in c]
+
+    vecs = [(i, vec(i)) for i in range(N_BASE)]
+    new_vecs = [(NEW_ID + j, vec(j)) for j in range(N_BATCH)]
+    return docs, batch, vecs, new_vecs
+
+
+def _staged(spark, root: str, name: str, rows: list[tuple], kind: str):
+    """``rows`` as one parquet file, the way a landed batch arrives."""
+    if kind == "docs":
+        cols, typ = ("doc_id", "text"), pa.string()
+    else:
+        cols, typ = ("vec_id", "embedding"), pa.list_(pa.float32())
+    table = pa.table({cols[0]: pa.array([r[0] for r in rows], pa.int64()),
+                      cols[1]: pa.array([r[1] for r in rows], typ)})
+    path = os.path.join(root, f"{name}.parquet")
+    pq.write_table(table, path)
+    return spark.read.parquet(path)
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs run)."""
+    sc = spark.sparkContext
+    group = f"store-jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def inputs():
+    return _corpus()
+
+
+@pytest.fixture()
+def workdir():
+    d = tempfile.mkdtemp(prefix="store-jobs-")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_dedup_add_batch_job_budget_and_stats_add_no_work(spark, inputs, workdir):
+    docs, batch, _, _ = inputs
+    base = _staged(spark, workdir, "base", docs, "docs")
+    new = _staged(spark, workdir, "batch", batch, "docs")
+    runs = {}
+    for label, stats in (("stats", {}), ("plain", None)):
+        dd = IncrementalDeduper(spark, os.path.join(workdir, label))
+        dd.add_batch(base)
+        pairs, jobs = _count_jobs(spark, lambda: dd.add_batch(new, stats=stats))
+        runs[label] = ({(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}, jobs)
+    (with_stats, jobs_stats), (plain, jobs_plain) = runs["stats"], runs["plain"]
+    assert jobs_stats <= DEDUP_JOB_BUDGET, jobs_stats
+    # stats= reads values the batch computes anyway: no extra Spark job
+    assert jobs_stats == jobs_plain, (jobs_stats, jobs_plain)
+    assert with_stats == plain == EXPECTED_PAIRS
+
+
+def test_ann_add_batch_job_budget_and_stats_add_no_work(spark, inputs, workdir):
+    _, _, vecs, new_vecs = inputs
+    base = _staged(spark, workdir, "base", vecs, "vecs")
+    new = _staged(spark, workdir, "batch", new_vecs, "vecs")
+    runs = {}
+    for label, stats in (("stats", {}), ("plain", None)):
+        ann = IncrementalANN(spark, os.path.join(workdir, label))
+        ann.add_batch(base)
+        n, jobs = _count_jobs(spark, lambda: ann.add_batch(new, stats=stats))
+        rows = sorted(
+            tuple(r) for r in ann.vectors.read()
+            .filter(f"id >= {NEW_ID}").select("id", "cluster", "cos_r").collect()
+        )
+        runs[label] = (n, jobs, hashlib.sha256(repr(rows).encode()).hexdigest())
+    (n_stats, jobs_stats, digest), (n_plain, jobs_plain, digest_plain) = (
+        runs["stats"], runs["plain"]
+    )
+    assert jobs_stats <= ANN_JOB_BUDGET, jobs_stats
+    assert jobs_stats == jobs_plain, (jobs_stats, jobs_plain)
+    assert n_stats == n_plain == N_BATCH
+    assert digest == digest_plain == EXPECTED_ANN_DIGEST
+
+
+def test_rebalance_runs_no_job_on_a_shuffled_frame(spark, workdir):
+    left = _staged(spark, workdir, "l", [(i, f"t{i}") for i in range(50)], "docs")
+    right = _staged(spark, workdir, "r", [(i, f"u{i}") for i in range(0, 50, 2)], "docs")
+    joined = left.join(right.select("doc_id"), "doc_id", "left_anti").groupBy("doc_id").count()
+    out, jobs = _count_jobs(spark, lambda: _rebalance(joined))
+    assert jobs == 0
+    assert out is joined
+
+
+def test_rebalance_widens_a_one_partition_scan_and_leaves_a_small_batch(spark, workdir):
+    rng = random.Random(3)
+    # ~1 MB of incompressible text in one file (one row group): one scan
+    # partition, big enough to be worth widening
+    big_rows = [(i, "".join(rng.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(2000)))
+                for i in range(500)]
+    big = _staged(spark, workdir, "big", big_rows, "docs")
+    assert big.rdd.getNumPartitions() == 1
+    wide, jobs = _count_jobs(spark, lambda: _rebalance(big))
+    assert jobs == 0
+    assert wide.rdd.getNumPartitions() > 1
+    assert sorted(r["doc_id"] for r in wide.collect()) == list(range(500))
+
+    small = _staged(spark, workdir, "small", big_rows[:N_BATCH], "docs")
+    out, jobs = _count_jobs(spark, lambda: _rebalance(small))
+    assert jobs == 0
+    assert out is small
