@@ -27,27 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import BENCH_QUERIES as DEFAULT_QUERIES  # noqa: E402
 from embulk_input_mixpanel_spark import workloads  # noqa: E402
 from embulk_input_mixpanel_spark.session import default_parallelism, get_spark  # noqa: E402
-
-DEFAULT_QUERIES = [
-    "q1_pricing_summary",
-    "topk_revenue_orders",
-    "broadcast_dim_join",
-    "latest_wins_per_user",
-    "watermark_skip_metrics",
-    "session_windows",
-    "doc_fingerprint",
-    "dedup_exact_docs",
-    "quality_score",
-    "cosine_topk",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_candidates",
-    "neardup_docs_lsh",
-    "embedding_neardup_lsh",
-    "ivf_topk",
-    "lang_id_heuristic",
-]
 
 
 _CANARY_SRC = r"""

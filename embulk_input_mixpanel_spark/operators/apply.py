@@ -10,10 +10,11 @@ Pipeline (each stage cites its reference analog):
    (watermark dedup; export_service.rb:102-107), counted per partition
    (skip counters; export_service.rb:134-136).
 3. **latest-wins reduction** — one winner per (repo, path) by
-   (commit_seq, event_seq, event_id) via partial-aggregating ``max_by``
-   (see operators.merge for why this is skew-proof). Duplicate event_ids
-   collapse here for free: a redelivery carries the same key and order
-   tuple, so no separate dedup shuffle is spent on it
+   (commit_seq, event_seq, event_id) via a partial-aggregating
+   ``max(struct(order..., payload...))`` (see operators.merge for why this
+   is skew-proof). Duplicate event_ids collapse here for free: a
+   redelivery carries the same key and order tuple, so no separate dedup
+   shuffle is spent on it
    (dedup; export_service.rb:102-107 + BASELINE.json event-id dedup).
 4. **flatten + schema evolution** — parse ``props`` JSON *after* the
    reduction (cheapest point), promote known keys to ``p_<key>`` columns,

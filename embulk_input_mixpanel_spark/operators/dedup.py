@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import BYTES_PER_TASK
+
 __all__ = [
     "P31",
     "derive_consts",
@@ -257,13 +259,6 @@ def _token_array(text_col: str | Column) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-# Input bytes per widened partition: the measured break-even of the
-# round-robin exchange (local[3]; shingles + 24 min-hashes per document):
-# a 65 KB, 500-document parquet runs as fast on one partition as on eight
-# (0.72 s vs 0.68 s), a 595 KB one takes 1.05 s on one and 0.76 s on three.
-_REBALANCE_BYTES = 128 * 1024
-
-
 def _has_exchange(plan) -> bool:
     """Whether a physical plan (a JVM SparkPlan) has an exchange in it;
     under AQE any such plan is wrapped in AdaptiveSparkPlan."""
@@ -286,7 +281,7 @@ def _rebalance(df: DataFrame) -> DataFrame:
       as wide as its shuffle, and asking it for its partition count
       would execute every shuffle stage below it (under AQE);
     - otherwise the width is sized from the optimizer's size estimate,
-      one partition per ``_REBALANCE_BYTES`` up to the default
+      one partition per ``session.BYTES_PER_TASK`` up to the default
       parallelism, and the scan is widened only if it is narrower. A
       batch smaller than that adds no exchange; a scan already as wide
       as the cluster (the 100 TB case) is left alone.
@@ -296,7 +291,7 @@ def _rebalance(df: DataFrame) -> DataFrame:
         return df
     target = min(
         df.sparkSession.sparkContext.defaultParallelism,
-        int(qe.optimizedPlan().stats().sizeInBytes()) // _REBALANCE_BYTES,
+        int(qe.optimizedPlan().stats().sizeInBytes()) // BYTES_PER_TASK,
     )
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)

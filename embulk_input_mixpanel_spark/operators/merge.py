@@ -9,11 +9,12 @@ explicit skew strategy.
 Design notes (the 100 TB story):
 
 - **Aggregation, not window.** Latest-wins is expressed as
-  ``groupBy(key).agg(max_by(payload, order))`` rather than
-  ``row_number() over (partition by key)``. ``max_by`` is a real aggregate:
-  Spark plans partial (map-side) + final aggregation, so a hot key with 10M
-  duplicate events is reduced to one row per map task *before* the shuffle
-  — the shuffle carries one row per key per task, never the raw skew. A
+  ``groupBy(key).agg(max(struct(order..., payload...)))`` rather than
+  ``row_number() over (partition by key)``. The struct max is a real
+  aggregate: Spark plans partial (map-side) + final aggregation, so a hot
+  key with 10M duplicate events is reduced to one row per map task
+  *before* the shuffle — the shuffle carries one row per key per task,
+  never the raw skew. A
   window function would instead shuffle every raw row of the hot key to a
   single reducer. This makes explicit salting unnecessary for conflict
   resolution; AQE skew-join splitting covers the residual join skew.
@@ -29,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["latest_wins", "merge_upsert", "salted_counts"]
+__all__ = ["latest_wins", "merge_upsert"]
 
 
 def _order_struct(order_cols: list[str], extra: list[Column] | None = None) -> Column:
@@ -128,18 +129,3 @@ def merge_upsert(
         merged = merged.filter(F.col(op_col) != F.lit("D"))
     return merged.drop("_src")
 
-
-def salted_counts(df: DataFrame, key_cols: list[str], sample_fraction: float = 0.01) -> DataFrame:
-    """Hot-key sketch: approximate per-key frequencies from a sample.
-
-    Used by callers that need an explicit salting decision (e.g. splitting
-    a pathological repo across sub-merges). The merge path itself is
-    skew-safe via partial aggregation; this exists for diagnostics and for
-    operators that must window (where partial agg is unavailable).
-    """
-    return (
-        df.sample(fraction=sample_fraction, seed=7)
-        .groupBy(*key_cols)
-        .count()
-        .withColumn("est_total", (F.col("count") / sample_fraction).cast("long"))
-    )

@@ -35,6 +35,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass
@@ -43,6 +44,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import BYTES_PER_TASK
 
 __all__ = [
     "LakeTable",
@@ -65,6 +68,8 @@ class ConcurrentCommitError(RuntimeError):
 _SNAPDIR = "_snapshots"
 _CURRENT = "CURRENT"
 _DATADIR = "data"
+# the bucket=N directory a data file was written into
+_BUCKET_DIR = re.compile(r"/bucket=(\d+)/[^/]*$")
 
 
 def bucket_of(num_buckets: int, *key_cols: str | Column) -> Column:
@@ -318,6 +323,23 @@ class LakeTable:
 
     # --------------------------------------------------------------- commit
 
+    def _staged_files(self, stage_rel: str) -> dict[str, list[str]]:
+        """Bucket id -> parquet files (table-relative) that a
+        ``partitionBy("bucket")`` write staged under ``stage_rel``."""
+        stage_abs = os.path.join(self.path, stage_rel)
+        staged: dict[str, list[str]] = {}
+        if os.path.isdir(stage_abs):
+            for entry in sorted(os.listdir(stage_abs)):
+                if not entry.startswith("bucket="):
+                    continue
+                sub = os.path.join(stage_abs, entry)
+                staged[str(int(entry.split("=", 1)[1]))] = [
+                    os.path.join(stage_rel, entry, f)
+                    for f in sorted(os.listdir(sub))
+                    if f.endswith(".parquet")
+                ]
+        return staged
+
     def commit_rewrite(
         self,
         df: DataFrame,
@@ -377,18 +399,7 @@ class LakeTable:
             .parquet(stage_abs)
         )
 
-        staged: dict[str, list[str]] = {}
-        if os.path.isdir(stage_abs):
-            for entry in sorted(os.listdir(stage_abs)):
-                if not entry.startswith("bucket="):
-                    continue
-                b = str(int(entry.split("=", 1)[1]))
-                sub = os.path.join(stage_abs, entry)
-                staged[b] = [
-                    os.path.join(stage_rel, entry, f)
-                    for f in sorted(os.listdir(sub))
-                    if f.endswith(".parquet")
-                ]
+        staged = self._staged_files(stage_rel)
 
         # critical section: the optimistic check must be atomic with the
         # pointer swap, else two writers can both pass and last-wins
@@ -425,25 +436,18 @@ class LakeTable:
         df: DataFrame,
         properties: dict[str, Any] | None = None,
         expected_version: int | None = None,
-        repartition_by_bucket: bool = True,
     ) -> Snapshot:
         """Append-only commit: add ``df``'s rows as NEW files in their
         buckets, leaving every existing file untouched.
 
-        ``repartition_by_bucket`` (default on) shuffles the batch so each
-        bucket lands in exactly ONE task -> ONE new file per touched
-        bucket per batch. Without it, partitionBy splits every task's
-        rows by bucket and a 64-task batch over 32 buckets appends up to
-        2048 tiny files — file-count, not byte-count, is what kills reads
-        at scale (measured 50s -> 6s on the incremental-dedup bulk batch).
-        The partition count is pinned to ``num_buckets`` on purpose: an
-        unpinned ``repartition(col)`` would let AQE coalesce a tiny
-        batch's write tasks, but the extra adaptive re-planning round
-        measurably costs MORE than num_buckets mostly-empty tasks save
-        (A/B'd at a 25-row batch: commits 1.5s unpinned vs 1.0s pinned),
-        and at real batch sizes every bucket task carries data anyway.
-        Callers whose input is already partitioned by bucket can pass
-        False to skip the shuffle.
+        The batch is shuffled with ``repartition(num_buckets, "bucket")``
+        so each bucket lands in exactly ONE task -> ONE new file per
+        touched bucket per batch. Without it, partitionBy splits every
+        task's rows by bucket and a 64-task batch over 32 buckets appends
+        up to 2048 tiny files — file-count, not byte-count, is what kills
+        reads at scale (measured 50s -> 6s on the incremental-dedup bulk
+        batch). Any static partition count keeps that invariant; see
+        CLAUDE.md for why the count stays pinned to ``num_buckets``.
 
         The O(batch) commit for IMMUTABLE data (dedup signatures, band
         buckets, audit logs): cost is writing the batch's own rows, never
@@ -467,27 +471,14 @@ class LakeTable:
         stage_abs = os.path.join(self.path, stage_rel)
         out_schema = pre.schema
         out_cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
-        staged_df = df.select("bucket", *out_cols)
-        if repartition_by_bucket:
-            staged_df = staged_df.repartition(pre.num_buckets, "bucket")
         (
-            staged_df
+            df.select("bucket", *out_cols)
+            .repartition(pre.num_buckets, "bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(stage_abs)
         )
-        staged: dict[str, list[str]] = {}
-        if os.path.isdir(stage_abs):
-            for entry in sorted(os.listdir(stage_abs)):
-                if not entry.startswith("bucket="):
-                    continue
-                b = str(int(entry.split("=", 1)[1]))
-                sub = os.path.join(stage_abs, entry)
-                staged[b] = [
-                    os.path.join(stage_rel, entry, f)
-                    for f in sorted(os.listdir(sub))
-                    if f.endswith(".parquet")
-                ]
+        staged = self._staged_files(stage_rel)
         with self._commit_lock():
             prev = self.snapshot()
             if expected_version is not None and prev.version != expected_version:
@@ -563,39 +554,44 @@ class LakeTable:
         if not todo:
             return None, stats
 
+        # data files don't carry the bucket column (it's directory-encoded
+        # at write), so it is read back per row from the file's bucket=N
+        # directory; the listing must agree with the directory, or a row
+        # would be rewritten into a bucket its readers never open
+        for b, fl in todo.items():
+            for f in fl:
+                m = _BUCKET_DIR.search(f)
+                if m is None or int(m.group(1)) != int(b):
+                    raise ValueError(
+                        f"compact: {f} is listed in bucket {b} but is not "
+                        f"in a bucket={b} directory"
+                    )
         stage_rel = os.path.join(
             _DATADIR, f"v{pre.version + 1:08d}-compact-{uuid.uuid4().hex[:8]}"
         )
         stage_abs = os.path.join(self.path, stage_rel)
         schema = pre.schema
-        # data files don't carry the bucket column (it's directory-encoded
-        # at write), so tag it back per bucket; the union is bounded by
-        # num_buckets, and repartition(n, bucket) lands each bucket in
-        # exactly one task -> exactly one output file per bucket dir
-        parts = [
-            self.spark.read.schema(schema)
-            .parquet(*[os.path.join(self.path, f) for f in fl])
-            .select(F.lit(int(b)).alias("bucket"), *[F.col(f2.name) for f2 in schema.fields])
-            for b, fl in todo.items()
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        writer = df.repartition(len(todo), "bucket").write.mode("overwrite")
+        paths = [os.path.join(self.path, f) for fl in todo.values() for f in fl]
+        file_bucket = F.regexp_extract("_metadata.file_path", _BUCKET_DIR.pattern, 1)
+        bucket = F.when(
+            file_bucket == "",
+            F.raise_error(F.concat(F.lit("compact: no bucket=N directory in "),
+                                   F.col("_metadata.file_path"))),
+        ).otherwise(file_bucket.cast("int"))
+        # ONE scan over every compacted file, rewritten by as many tasks as
+        # its on-disk bytes need (the driver stats the files; no Spark job),
+        # capped at one task per bucket. Any static task count lands each
+        # bucket in exactly one task -> one output file per bucket dir
+        # (or maxRecordsPerFile roll-overs of it).
+        n_tasks = max(1, min(len(todo), sum(map(os.path.getsize, paths)) // BYTES_PER_TASK))
+        df = self.spark.read.schema(schema).parquet(*paths).select(
+            bucket.alias("bucket"), *[F.col(f.name) for f in schema.fields]
+        )
+        writer = df.repartition(n_tasks, "bucket").write.mode("overwrite")
         if max_records_per_file is not None:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         writer.partitionBy("bucket").parquet(stage_abs)
-        staged: dict[str, list[str]] = {}
-        for entry in sorted(os.listdir(stage_abs)):
-            if not entry.startswith("bucket="):
-                continue
-            b = str(int(entry.split("=", 1)[1]))
-            sub = os.path.join(stage_abs, entry)
-            staged[b] = [
-                os.path.join(stage_rel, entry, f)
-                for f in sorted(os.listdir(sub))
-                if f.endswith(".parquet")
-            ]
+        staged = self._staged_files(stage_rel)
         if _post_stage_hook is not None:
             _post_stage_hook()
 

@@ -161,7 +161,7 @@ _LATEST_SQL = """
 @_q("latest_wins_per_user", _LATEST_SQL)
 def latest_wins_per_user(spark, sf_dir):
     """Latest-wins conflict resolution per key, via the engine's
-    partial-aggregating max_by operator (operators/merge.py — A2)."""
+    partial-aggregating max-of-struct operator (operators/merge.py — A2)."""
     ev = load(spark, sf_dir, "events")
     w = latest_wins(ev, ["user_id"], ["ts", "event_id"], tiebreak_col=None)
     return w.select(

@@ -222,6 +222,74 @@ def test_compact_merges_small_files_physically(spark, tmp_table_dir):
     assert _multiset(t.read()) == before
 
 
+def _appended(spark, path, num_buckets, batches=3, rows=60):
+    t = LakeTable.create(spark, path, SCHEMA, num_buckets=num_buckets)
+    for i in range(batches):
+        rows_i = [("r%d" % j, "p%d" % (j % 7), i) for j in range(rows)]
+        t.commit_append(_with_bucket(spark.createDataFrame(rows_i, SCHEMA), num_buckets))
+    return t
+
+
+def test_compact_keeps_each_bucket_rows_in_that_bucket(spark, tmp_table_dir):
+    """The single-scan rewrite reads every row's bucket back from its
+    file: per bucket, the row multiset is identical before and after,
+    and every row still hashes to the bucket it is stored in."""
+    t = _appended(spark, tmp_table_dir, 8)
+    before = {int(b): _multiset(t.read(buckets=[int(b)])) for b in t.snapshot().files}
+    snap, stats = t.compact(min_files=2)
+    assert snap is not None and stats["buckets_compacted"] == len(before)
+    for b, rows in before.items():
+        got = t.read(buckets=[b])
+        assert _multiset(got) == rows, b
+        assert got.filter(t.bucket_expr("repo", "path") != b).count() == 0, b
+
+
+def test_compact_narrow_rewrite_writes_one_file_per_bucket(spark, tmp_table_dir):
+    """A rewrite small enough for one task still writes one file per
+    compacted bucket, as every append does: any static task count puts
+    each bucket in exactly one task."""
+    from embulk_input_mixpanel_spark.session import BYTES_PER_TASK
+
+    t = _appended(spark, tmp_table_dir, 8)
+    pre = t.snapshot()
+    total = sum(os.path.getsize(os.path.join(t.path, f)) for f in pre.all_files())
+    assert len(pre.files) == 8 and total < 2 * BYTES_PER_TASK  # sized to one task
+    # each of the three appends wrote one file per bucket it touched
+    assert all(len(fl) == 3 for fl in pre.files.values())
+    snap, stats = t.compact(min_files=2)
+    assert stats["buckets_compacted"] == 8 and stats["files_out"] == 8
+    assert {b: len(fl) for b, fl in snap.files.items()} == {b: 1 for b in pre.files}
+
+
+def test_compact_refuses_a_file_outside_its_bucket_directory(spark, tmp_table_dir):
+    """The bucket a compacted row lands in comes from its file's
+    bucket=N directory, so a listed file whose directory disagrees with
+    its listing (or that sits in no bucket=N directory) makes compact
+    raise before anything is staged, never mislabel its rows."""
+    import dataclasses
+    import shutil
+
+    import pytest
+
+    t = _appended(spark, tmp_table_dir, 2)
+    good = t.snapshot()
+    b0, b1 = sorted(good.files)
+    # a bucket-1 file listed under bucket 0 (not in bucket 0's listing)
+    swapped = dict(good.files, **{b0: good.files[b0] + good.files[b1][:1]})
+    # a bucket-0 file moved out of its bucket=0 directory
+    loose = os.path.join("data", "loose", os.path.basename(good.files[b0][0]))
+    os.makedirs(os.path.join(t.path, "data", "loose"))
+    shutil.copy(os.path.join(t.path, good.files[b0][0]), os.path.join(t.path, loose))
+    moved = dict(good.files, **{b0: [loose] + good.files[b0][1:]})
+    for files in (swapped, moved):
+        t._write_snapshot(dataclasses.replace(good, version=t.version + 1, files=files))
+        forged = t.snapshot()
+        with pytest.raises(ValueError, match="bucket="):
+            t.compact(min_files=2)
+        assert t.snapshot() == forged
+        assert not any("compact" in d for d in os.listdir(os.path.join(t.path, "data")))
+
+
 def test_compact_commutes_with_concurrent_append(spark, tmp_table_dir):
     """A batch appended BETWEEN staging and the commit critical section
     must survive: the swapped bucket keeps the racing file alongside the

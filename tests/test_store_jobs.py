@@ -6,7 +6,8 @@ under its own Spark job group, and counts the jobs it scheduled with
 action is a job of its own, so the counts are a direct measure of the
 fixed cost a small batch pays. The pinned results are what the same
 inputs produced before the job budgets were cut (pair sets, ingest count
-and the new vectors' cluster assignments).
+and the new vectors' cluster assignments). The stores' maintenance
+compaction is budgeted the same way.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import pytest
 from embulk_input_mixpanel_spark.operators.dedup import _rebalance
 from embulk_input_mixpanel_spark.operators.incremental_ann import IncrementalANN
 from embulk_input_mixpanel_spark.operators.incremental_dedup import IncrementalDeduper
+from embulk_input_mixpanel_spark.sources.lake import LakeTable
 
 N_BASE = 500
 N_BATCH = 25
@@ -177,3 +179,22 @@ def test_rebalance_widens_a_one_partition_scan_and_leaves_a_small_batch(spark, w
     out, jobs = _count_jobs(spark, lambda: _rebalance(small))
     assert jobs == 0
     assert out is small
+
+
+def test_compact_of_many_small_files_runs_two_jobs(spark, workdir):
+    """One scan over every compacted file plus one write: a shuffle-map
+    job and a write job. The scan names 96 files, and Spark's default
+    would first list more than 32 explicit paths in a job of its own."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
+    t = LakeTable.create(spark, os.path.join(workdir, "tbl"), schema, num_buckets=32)
+    for i in range(3):
+        rows = spark.createDataFrame([(i * 1000 + j, f"v{j}") for j in range(200)], schema)
+        t.commit_append(rows.withColumn("bucket", t.bucket_expr("id")))
+    files_in = len(t.snapshot().all_files())
+    assert files_in >= 64 and len(t.snapshot().files) == 32
+    (snap, stats), jobs = _count_jobs(spark, lambda: t.compact(min_files=2))
+    assert jobs <= 2
+    assert stats["files_in"] == files_in and stats["buckets_compacted"] == 32
+    assert all(len(fl) == 1 for fl in snap.files.values())
