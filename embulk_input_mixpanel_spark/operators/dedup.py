@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import BYTES_PER_TASK
+from ..session import BYTES_PER_TASK, estimated_bytes
 
 __all__ = [
     "P31",
@@ -286,12 +286,11 @@ def _rebalance(df: DataFrame) -> DataFrame:
       batch smaller than that adds no exchange; a scan already as wide
       as the cluster (the 100 TB case) is left alone.
     """
-    qe = df._jdf.queryExecution()
-    if _has_exchange(qe.executedPlan()):
+    if _has_exchange(df._jdf.queryExecution().executedPlan()):
         return df
     target = min(
         df.sparkSession.sparkContext.defaultParallelism,
-        int(qe.optimizedPlan().stats().sizeInBytes()) // BYTES_PER_TASK,
+        estimated_bytes(df) // BYTES_PER_TASK,
     )
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -22,23 +22,49 @@ harness, and `spark-submit` jobs share one configuration story:
   ``parallelPartitionDiscovery.threshold`` explicit paths (default 32)
   first runs a Spark job of one task per path just to stat them. The
   threshold is raised to 1024 so the driver stats them itself.
+- **Small lake writes skip Spark's file writer** — a lake commit whose
+  input is at most ``DRIVER_WRITE_BYTES`` is collected as Arrow and
+  written by the driver (``sources.lake``); see the constant for why.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark", "default_parallelism", "BYTES_PER_TASK"]
+__all__ = [
+    "get_spark", "default_parallelism", "estimated_bytes", "BYTES_PER_TASK",
+    "DRIVER_WRITE_BYTES",
+]
 
 # Input bytes per task of a sized exchange: the measured break-even of a
 # round-robin exchange (local[3]; shingles + 24 min-hashes per document):
 # a 65 KB, 500-document parquet runs as fast on one partition as on eight
 # (0.72 s vs 0.68 s), a 595 KB one takes 1.05 s on one and 0.76 s on
-# three. ``operators.dedup._rebalance`` widens scans by it and
-# ``LakeTable.compact`` sizes its rewrite by it.
+# three. ``operators.dedup._rebalance`` widens scans by it,
+# ``LakeTable.compact`` sizes its rewrite by it and ``lake_buckets_of``
+# aggregates a frame under it in one task.
 BYTES_PER_TASK = 128 * 1024
+
+# Largest lake write the driver stages itself (``df.toArrow()`` then one
+# pyarrow file per bucket) instead of Spark's partitioned file writer.
+# Without Hadoop's native library, Spark's local file system forks a
+# ``chmod`` for every file, checksum file and directory it creates:
+# about 8 forks per written file. ``tools/write_cost.py --buckets 32
+# --rows 25`` (4 vCPUs, local[3], Hadoop native library not loaded):
+#   spark   0.865 s  151 forks  18 files  2 jobs
+#   driver  0.061 s    1 fork   18 files  1 job
+# At 1 MiB every store write of a 25-row batch takes the driver path; at
+# 256 KiB an ANN vectors append (optimizer estimate 405 KB for about
+# 13 KB of rows) and a sigs compaction stayed on Spark. A 2k-event
+# replay commit (4.4 MB) stays on Spark.
+DRIVER_WRITE_BYTES = 1024 * 1024
+
+
+def estimated_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``; plans it, runs no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def default_parallelism() -> int:

@@ -41,11 +41,14 @@ import uuid
 from dataclasses import dataclass
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import BYTES_PER_TASK
+from ..session import BYTES_PER_TASK, DRIVER_WRITE_BYTES, estimated_bytes
 
 __all__ = [
     "LakeTable",
@@ -83,17 +86,68 @@ def bucket_of(num_buckets: int, *key_cols: str | Column) -> Column:
 
 
 def lake_buckets_of(df: DataFrame, table: "LakeTable", *key_cols: str) -> list[int]:
-    """Distinct lake-bucket ids a frame's key columns hash into — a
-    driver collect of at most ``table.num_buckets`` integers, used by the
-    incremental stores to prune store reads to the files a batch can
-    possibly match (the pruning that keeps per-batch cost O(batch) at any
-    corpus size)."""
-    rows = (
-        df.select(bucket_of(table.num_buckets, *key_cols).alias("b"))
-        .distinct()
-        .collect()
+    """Distinct lake-bucket ids a frame's key columns hash into — one
+    global ``collect_set`` of at most ``table.num_buckets`` integers, used
+    by the incremental stores to prune store reads to the files a batch
+    can possibly match (the pruning that keeps per-batch cost O(batch) at
+    any corpus size).
+
+    A frame the optimizer sizes under ``BYTES_PER_TASK`` is aggregated in
+    one task: a one-partition input needs no exchange before the global
+    aggregate, so it is one Spark job instead of two."""
+    ids = df.select(bucket_of(table.num_buckets, *key_cols).alias("b"))
+    if estimated_bytes(ids) <= BYTES_PER_TASK:
+        ids = ids.coalesce(1)
+    return sorted(ids.agg(F.collect_set("b")).collect()[0][0])
+
+
+def _literal_bucket(spark: SparkSession, num_buckets: int, values: list[Column]) -> int:
+    """:func:`bucket_of` over constant columns, read from the optimized
+    plan of a one-row projection: constant folding reduces it to a
+    literal, so no Spark job runs. Anything else raises."""
+    plan = (
+        spark.range(1)
+        .select(bucket_of(num_buckets, *values).alias("b"))
+        ._jdf.queryExecution().optimizedPlan()
     )
-    return sorted(int(r["b"]) for r in rows)
+    folded = (
+        plan.projectList().apply(0).child()
+        if plan.getClass().getSimpleName() == "Project" else plan
+    )
+    if folded.getClass().getSimpleName() != "Literal":
+        raise RuntimeError(f"bucket id did not fold to a literal:\n{plan}")
+    return int(folded.value())
+
+
+def _write_buckets(batch: pa.Table, stage_abs: str, max_records_per_file: int | None) -> None:
+    """Driver-side twin of ``write.partitionBy("bucket").parquet``: one
+    file per bucket under ``bucket=N`` (or roll-overs every
+    ``max_records_per_file`` rows), without the ``bucket`` column. No
+    dictionary pages and no stored Arrow schema: with pyarrow's defaults
+    the store tables' bytes per ingested row were 25% above Spark's
+    (perfbench store_trickle, seed 1)."""
+    if batch.num_rows == 0:
+        return
+    if batch.column("bucket").null_count:
+        raise ValueError("lake write: a row has a null bucket")
+    batch = batch.sort_by("bucket")
+    ids = batch.column("bucket").to_numpy()
+    data = batch.drop_columns(["bucket"])
+    starts = [0, *(np.flatnonzero(np.diff(ids)) + 1).tolist()]
+    ends = starts[1:] + [len(ids)]
+    step = max_records_per_file or batch.num_rows
+    run = uuid.uuid4().hex
+    for s, e in zip(starts, ends):
+        bucket_dir = os.path.join(stage_abs, f"bucket={int(ids[s])}")
+        os.makedirs(bucket_dir)
+        for i, lo in enumerate(range(s, e, step)):
+            pq.write_table(
+                data.slice(lo, min(step, e - lo)),
+                os.path.join(bucket_dir, f"part-{i:05d}-{run}.c000.snappy.parquet"),
+                compression="snappy",
+                use_dictionary=False,
+                store_schema=False,
+            )
 
 
 @dataclass(frozen=True)
@@ -309,14 +363,19 @@ class LakeTable:
         1/num_buckets of the table's files regardless of table size —
         the serving-path analog of Iceberg bucket-transform pruning. The
         residual equality predicates push into the single-bucket parquet
-        scan.
+        scan. The bucket id is read from the optimized plan, where
+        constant folding has reduced the hash of literals to a literal:
+        no Spark job. Each value is cast to its column's type first (a
+        Python int is an int literal, and xxhash64 hashes an int and a
+        long differently), and the bucket count is the looked-up
+        snapshot's own (a re-bucketed table's history keeps its count).
         """
-        row = (
-            self.spark.range(1)
-            .select(bucket_of(self.num_buckets, *[F.lit(v) for v in key.values()]).alias("b"))
-            .first()
+        snap = self.snapshot(version)
+        types = {f.name: f.dataType for f in snap.schema.fields}
+        bucket = _literal_bucket(
+            self.spark, snap.num_buckets, [F.lit(v).cast(types[c]) for c, v in key.items()]
         )
-        df = self.read(version=version, buckets=[int(row["b"])])
+        df = self.read(version=snap.version, buckets=[bucket])
         for c, v in key.items():
             df = df.filter(F.col(c) == F.lit(v))
         return df
@@ -325,7 +384,7 @@ class LakeTable:
 
     def _staged_files(self, stage_rel: str) -> dict[str, list[str]]:
         """Bucket id -> parquet files (table-relative) that a
-        ``partitionBy("bucket")`` write staged under ``stage_rel``."""
+        :meth:`_stage` write staged under ``stage_rel``."""
         stage_abs = os.path.join(self.path, stage_rel)
         staged: dict[str, list[str]] = {}
         if os.path.isdir(stage_abs):
@@ -339,6 +398,47 @@ class LakeTable:
                     if f.endswith(".parquet")
                 ]
         return staged
+
+    def _stage(
+        self,
+        df: DataFrame,
+        version: int,
+        nbytes: int,
+        partitions: int | None = None,
+        max_records_per_file: int | None = None,
+        kind: str = "",
+    ) -> dict[str, list[str]]:
+        """Write ``df`` (a ``bucket`` column plus the data columns) into a
+        fresh staging directory as ``bucket=N`` subdirectories and return
+        the staged listing. Nothing is published: the caller swaps the
+        pointer.
+
+        The directory is unique per ATTEMPT, not per version: two racing
+        writers must never overwrite each other's staged files (a
+        version-numbered dir let the loser's overwrite delete files the
+        winner's committed snapshot referenced). Orphaned attempt dirs
+        are unreferenced garbage, never referenced by any snapshot.
+
+        An input of at most ``session.DRIVER_WRITE_BYTES`` (``nbytes``) is
+        collected as Arrow in one Spark job and written by the driver, one
+        file per bucket. A larger one goes through Spark's writer,
+        shuffled first by ``repartition(partitions, "bucket")`` when
+        ``partitions`` is given (any static count puts each bucket in one
+        task, so one file per bucket), else written as it is laid out."""
+        stage_rel = os.path.join(
+            _DATADIR, f"v{version:08d}-{kind}{uuid.uuid4().hex[:8]}"
+        )
+        stage_abs = os.path.join(self.path, stage_rel)
+        if nbytes <= DRIVER_WRITE_BYTES:
+            _write_buckets(df.toArrow(), stage_abs, max_records_per_file)
+        else:
+            if partitions is not None:
+                df = df.repartition(partitions, "bucket")
+            writer = df.write.mode("overwrite")
+            if max_records_per_file is not None:
+                writer = writer.option("maxRecordsPerFile", max_records_per_file)
+            writer.partitionBy("bucket").parquet(stage_abs)
+        return self._staged_files(stage_rel)
 
     def commit_rewrite(
         self,
@@ -354,7 +454,11 @@ class LakeTable:
         ``df`` must carry a ``bucket`` int column and contain the complete
         new contents of exactly the touched buckets. Data is written
         *before* the snapshot swap; a crash mid-write leaves the previous
-        snapshot fully intact (rollback = do nothing).
+        snapshot fully intact (rollback = do nothing). An input the
+        optimizer sizes at most ``session.DRIVER_WRITE_BYTES`` is written
+        by the driver (:meth:`_stage`); a larger one keeps its own layout
+        (the replay MERGE arrives partitioned by bucket) through Spark's
+        writer.
 
         ``expected_version``: optimistic-concurrency guard — refuse to
         publish if another writer advanced the table since the batch read
@@ -375,31 +479,13 @@ class LakeTable:
             raise ConcurrentCommitError(
                 f"table at v{pre.version}, batch planned against v{expected_version}"
             )
-        # staging dir is unique per ATTEMPT, not per version: two racing
-        # writers must never overwrite each other's staged files (a
-        # version-numbered dir let the loser's overwrite delete files the
-        # winner's committed snapshot referenced). Orphaned attempt dirs
-        # are unreferenced garbage, never referenced by any snapshot.
-        stage_rel = os.path.join(
-            _DATADIR, f"v{pre.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        stage_abs = os.path.join(self.path, stage_rel)
-
         out_schema = schema or pre.schema
         # cast to the declared schema: callers may carry wider inferred
         # types (e.g. python-int long vs table int) and parquet readers
         # reject type drift between files
         out_cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
-        # partitionBy(bucket) gives deterministic bucket->files discovery;
-        # one directory per touched bucket, written in parallel.
-        (
-            df.select("bucket", *out_cols)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(stage_abs)
-        )
-
-        staged = self._staged_files(stage_rel)
+        out = df.select("bucket", *out_cols)
+        staged = self._stage(out, pre.version + 1, estimated_bytes(out))
 
         # critical section: the optimistic check must be atomic with the
         # pointer swap, else two writers can both pass and last-wins
@@ -440,14 +526,21 @@ class LakeTable:
         """Append-only commit: add ``df``'s rows as NEW files in their
         buckets, leaving every existing file untouched.
 
-        The batch is shuffled with ``repartition(num_buckets, "bucket")``
-        so each bucket lands in exactly ONE task -> ONE new file per
-        touched bucket per batch. Without it, partitionBy splits every
-        task's rows by bucket and a 64-task batch over 32 buckets appends
-        up to 2048 tiny files — file-count, not byte-count, is what kills
-        reads at scale (measured 50s -> 6s on the incremental-dedup bulk
-        batch). Any static partition count keeps that invariant; see
-        CLAUDE.md for why the count stays pinned to ``num_buckets``.
+        Every append adds ONE new file per touched bucket. An input the
+        optimizer sizes at most ``session.DRIVER_WRITE_BYTES`` (every
+        25-row store batch) is collected as Arrow in one Spark job and
+        written by the driver (:meth:`_stage`): on a local file system
+        without Hadoop's native library, Spark's writer forks about 8
+        ``chmod`` processes per file (a 25-row write into 32 buckets:
+        0.87 s, against 0.06 s on the driver). A larger input is shuffled
+        with ``repartition(num_buckets, "bucket")`` so each bucket lands
+        in exactly ONE task. Without it, partitionBy splits every task's
+        rows by bucket and a 64-task batch over 32 buckets appends up to 2048
+        tiny files — file-count, not byte-count, is what kills reads at
+        scale (measured 50s -> 6s on the incremental-dedup bulk batch).
+        Any static partition count keeps that invariant; the count stays
+        pinned to ``num_buckets`` because a count sized from the input's
+        estimate won only 3 of 5 traced store_trickle A/B pairs.
 
         The O(batch) commit for IMMUTABLE data (dedup signatures, band
         buckets, audit logs): cost is writing the batch's own rows, never
@@ -465,20 +558,11 @@ class LakeTable:
             raise ConcurrentCommitError(
                 f"table at v{pre.version}, batch planned against v{expected_version}"
             )
-        stage_rel = os.path.join(
-            _DATADIR, f"v{pre.version + 1:08d}-{uuid.uuid4().hex[:8]}"
+        out_cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in pre.schema.fields]
+        out = df.select("bucket", *out_cols)
+        staged = self._stage(
+            out, pre.version + 1, estimated_bytes(out), partitions=pre.num_buckets
         )
-        stage_abs = os.path.join(self.path, stage_rel)
-        out_schema = pre.schema
-        out_cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
-        (
-            df.select("bucket", *out_cols)
-            .repartition(pre.num_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(stage_abs)
-        )
-        staged = self._staged_files(stage_rel)
         with self._commit_lock():
             prev = self.snapshot()
             if expected_version is not None and prev.version != expected_version:
@@ -566,10 +650,6 @@ class LakeTable:
                         f"compact: {f} is listed in bucket {b} but is not "
                         f"in a bucket={b} directory"
                     )
-        stage_rel = os.path.join(
-            _DATADIR, f"v{pre.version + 1:08d}-compact-{uuid.uuid4().hex[:8]}"
-        )
-        stage_abs = os.path.join(self.path, stage_rel)
         schema = pre.schema
         paths = [os.path.join(self.path, f) for fl in todo.values() for f in fl]
         file_bucket = F.regexp_extract("_metadata.file_path", _BUCKET_DIR.pattern, 1)
@@ -578,20 +658,18 @@ class LakeTable:
             F.raise_error(F.concat(F.lit("compact: no bucket=N directory in "),
                                    F.col("_metadata.file_path"))),
         ).otherwise(file_bucket.cast("int"))
-        # ONE scan over every compacted file, rewritten by as many tasks as
-        # its on-disk bytes need (the driver stats the files; no Spark job),
-        # capped at one task per bucket. Any static task count lands each
-        # bucket in exactly one task -> one output file per bucket dir
-        # (or maxRecordsPerFile roll-overs of it).
-        n_tasks = max(1, min(len(todo), sum(map(os.path.getsize, paths)) // BYTES_PER_TASK))
+        # ONE scan over every compacted file, sized by its on-disk bytes
+        # (the driver stats the files; no Spark job): a Spark rewrite gets
+        # as many tasks as the bytes need, capped at one task per bucket.
+        nbytes = sum(map(os.path.getsize, paths))
         df = self.spark.read.schema(schema).parquet(*paths).select(
             bucket.alias("bucket"), *[F.col(f.name) for f in schema.fields]
         )
-        writer = df.repartition(n_tasks, "bucket").write.mode("overwrite")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy("bucket").parquet(stage_abs)
-        staged = self._staged_files(stage_rel)
+        staged = self._stage(
+            df, pre.version + 1, nbytes,
+            partitions=max(1, min(len(todo), nbytes // BYTES_PER_TASK)),
+            max_records_per_file=max_records_per_file, kind="compact-",
+        )
         if _post_stage_hook is not None:
             _post_stage_hook()
 

@@ -6,7 +6,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from embulk_input_mixpanel_spark.sources.lake import LakeTable
+from embulk_input_mixpanel_spark.sources.lake import LakeTable, bucket_of
 
 SCHEMA = T.StructType(
     [
@@ -409,3 +409,212 @@ def test_compact_max_records_per_file_bounds_output(spark, tmp_table_dir):
     files = t.snapshot().files["0"]
     assert len(files) >= 3, files  # 120 rows / 50 cap -> >= 3 files
     assert _multiset(t.read()) == before
+
+
+# ---------------------------------------------- driver-written small commits
+
+WIDE = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("n", T.IntegerType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("ls", T.ArrayType(T.LongType())),
+        T.StructField("ds", T.ArrayType(T.DoubleType())),
+    ]
+)
+WIDE_ROWS = [
+    (1, 7, 1.5, "plain", [1, 2, 3], [0.5, -1.0]),
+    (2, -3, float("nan"), "", [], []),
+    (3, None, None, None, None, None),
+    (4, 0, -0.0, "héllo wörld ✓ 日本", [None, 4], [float("nan"), None]),
+    (5, 2**31 - 1, 1e300, "a" * 300, [2**62], [float("inf"), float("-inf")]),
+    (None, 1, 2.0, "null id", [0], [0.0]),
+    *[(100 + i, i, i / 7, f"r{i}", list(range(i % 4)), [i * 0.25] * (i % 3)) for i in range(40)],
+]
+
+
+def _wide_table(spark, root, num_buckets=8):
+    """A table under ``root/t`` and WIDE_ROWS landed as parquet under
+    ``root/in``: a file scan has a real size estimate, where a frame
+    built from a Python list is sized as unknown (and so always takes
+    Spark's writer)."""
+    spark.createDataFrame(WIDE_ROWS, WIDE).write.parquet(os.path.join(root, "in"))
+    t = LakeTable.create(spark, os.path.join(root, "t"), WIDE, num_buckets=num_buckets)
+    df = spark.read.schema(WIDE).parquet(os.path.join(root, "in"))
+    return t, df.withColumn("bucket", t.bucket_expr("id"))
+
+
+def _rows(df):
+    """Order-free, NaN-safe row listing (NaN != NaN as a float)."""
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _writers(t):
+    """Bucket id -> parquet `created_by` of each file in the snapshot."""
+    import pyarrow.parquet as pq
+
+    return {
+        b: {pq.ParquetFile(os.path.join(t.path, f)).metadata.created_by.split()[0] for f in fl}
+        for b, fl in t.snapshot().files.items()
+    }
+
+
+def test_driver_and_spark_writes_read_back_identically(spark, tmp_table_dir, monkeypatch):
+    """The same rows staged by the driver (pyarrow) and by Spark's writer
+    read back identically through read(), after an append and after a
+    compaction: longs, ints, doubles with NaN/inf/-0.0, empty and
+    non-ASCII strings, nulls everywhere, and long/double arrays that are
+    empty, null or hold nulls."""
+    from embulk_input_mixpanel_spark.sources import lake
+
+    driver, df = _wide_table(spark, os.path.join(tmp_table_dir, "driver"))
+    for _ in range(2):
+        driver.commit_append(df)
+    monkeypatch.setattr(lake, "DRIVER_WRITE_BYTES", -1)
+    on_spark, df_spark = _wide_table(spark, os.path.join(tmp_table_dir, "spark"))
+    for _ in range(2):
+        on_spark.commit_append(df_spark)
+    assert {w for ws in _writers(driver).values() for w in ws} == {"parquet-cpp-arrow"}
+    assert {w for ws in _writers(on_spark).values() for w in ws} == {"parquet-mr"}
+    expected = sorted(repr(tuple(r)) for r in WIDE_ROWS * 2)
+    assert _rows(driver.read()) == _rows(on_spark.read()) == expected
+    for b in driver.snapshot().files:
+        assert _rows(driver.read(buckets=[int(b)])) == _rows(on_spark.read(buckets=[int(b)]))
+
+    monkeypatch.setattr(lake, "DRIVER_WRITE_BYTES", 1 << 20)
+    driver.compact(min_files=2)
+    monkeypatch.setattr(lake, "DRIVER_WRITE_BYTES", -1)
+    on_spark.compact(min_files=2)
+    assert _rows(driver.read()) == _rows(on_spark.read()) == expected
+
+
+def test_driver_write_adds_one_file_per_touched_bucket(spark, tmp_table_dir):
+    """Every small append and rewrite stages exactly one driver-written
+    file in each bucket its rows hash into, and none elsewhere."""
+    t, df = _wide_table(spark, tmp_table_dir, num_buckets=64)
+    touched = {str(r["bucket"]) for r in df.select("bucket").distinct().collect()}
+    assert 1 < len(touched) < 64
+    t.commit_append(df)
+    t.commit_append(df)
+    assert {b: len(fl) for b, fl in t.snapshot().files.items()} == {b: 2 for b in touched}
+    t.commit_rewrite(df, sorted(int(b) for b in touched))
+    assert {b: len(fl) for b, fl in t.snapshot().files.items()} == {b: 1 for b in touched}
+    assert all(w == {"parquet-cpp-arrow"} for w in _writers(t).values())
+    assert _rows(t.read()) == sorted(repr(tuple(r)) for r in WIDE_ROWS)
+
+
+def test_driver_compaction_rolls_over_at_max_records_per_file(spark, tmp_table_dir):
+    """A driver-written compaction splits a bucket into files of at most
+    ``max_records_per_file`` rows, like Spark's maxRecordsPerFile."""
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(spark, tmp_table_dir, SCHEMA, num_buckets=1)
+    for i in range(3):
+        rows = [("r%d" % j, "p", i) for j in range(40)]
+        t.commit_append(_with_bucket(spark.createDataFrame(rows, SCHEMA), 1))
+    before = _multiset(t.read())
+    snap, stats = t.compact(min_files=2, max_records_per_file=50)
+    files = snap.files["0"]
+    counts = sorted(pq.ParquetFile(os.path.join(t.path, f)).metadata.num_rows for f in files)
+    assert counts == [20, 50, 50] and stats["files_out"] == 3
+    assert _writers(t) == {"0": {"parquet-cpp-arrow"}}
+    assert _multiset(t.read()) == before
+
+
+def test_driver_write_crash_before_pointer_swap_is_invisible(spark, tmp_table_dir, monkeypatch):
+    """A driver-staged append that dies before its pointer swap leaves
+    its files on disk, unreferenced: readers see the previous snapshot,
+    and the table commits normally afterwards."""
+    t, df = _wide_table(spark, tmp_table_dir)
+    t.commit_append(df)
+    data = os.path.join(t.path, "data")
+    staged_before = set(os.listdir(data))
+
+    def crash(snap):
+        raise OSError("killed before the pointer swap")
+
+    monkeypatch.setattr(t, "_write_snapshot", crash)
+    import pytest
+
+    with pytest.raises(OSError):
+        t.commit_append(df)
+    assert len(set(os.listdir(data)) - staged_before) == 1  # staged, unreferenced
+    monkeypatch.undo()
+    assert t.version == 1
+    assert _rows(t.read()) == sorted(repr(tuple(r)) for r in WIDE_ROWS)
+    t.commit_append(df)
+    assert t.read().count() == 2 * len(WIDE_ROWS)
+
+
+def test_write_above_driver_cutoff_takes_spark_writer(spark, tmp_table_dir):
+    """An input the optimizer sizes above ``DRIVER_WRITE_BYTES`` is
+    staged by Spark's writer (one file per bucket), not collected."""
+    from embulk_input_mixpanel_spark.session import DRIVER_WRITE_BYTES, estimated_bytes
+
+    t = LakeTable.create(spark, tmp_table_dir, SCHEMA, num_buckets=4)
+    big = spark.range(150_000).select(
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("repo"),
+        F.lit("p").alias("path"),
+        F.col("id").alias("v"),
+    )
+    big = _with_bucket(big, 4)
+    assert estimated_bytes(big) > DRIVER_WRITE_BYTES
+    t.commit_append(big)
+    assert _writers(t) == {str(b): {"parquet-mr"} for b in range(4)}
+    assert t.read().count() == 150_000
+
+
+def test_lookup_bucket_matches_a_computed_bucket_over_random_keys(spark):
+    """The bucket lookup() reads from the constant-folded plan equals the
+    one Spark computes for the same literals, over random string keys
+    (empty and non-ASCII included) and long keys."""
+    import random
+
+    import pytest
+
+    from embulk_input_mixpanel_spark.sources.lake import _literal_bucket
+
+    rng = random.Random(11)
+    alphabet = "abcXYZ09 _/é日本✓\u0000"
+    keys = [["", ""], ["é", "日本"]]
+    while len(keys) < 200:
+        if rng.random() < 0.5:
+            keys.append(["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12)))
+                         for _ in range(2)])
+        else:
+            keys.append([rng.randint(-(2**63), 2**63 - 1)])
+    computed = spark.range(1).select(
+        *[bucket_of(32, *[F.lit(v) for v in k]).alias(f"b{i}") for i, k in enumerate(keys)]
+    ).first()
+    assert [_literal_bucket(spark, 32, [F.lit(v) for v in k]) for k in keys] == list(computed)
+    with pytest.raises(RuntimeError, match="literal"):
+        _literal_bucket(spark, 32, [F.col("id")])
+
+
+def test_lookup_hashes_the_key_as_its_column_type_and_snapshot(spark, tmp_table_dir):
+    """A Python int key of a long column finds its row (an int literal
+    would hash into another bucket), and a lookup of an older snapshot
+    uses that snapshot's bucket count after the table was re-bucketed."""
+    schema = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
+    t = LakeTable.create(spark, tmp_table_dir, schema, num_buckets=16)
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(100)], schema)
+    t.commit_rewrite(rows.withColumn("bucket", t.bucket_expr("id")), list(range(16)))
+    assert [tuple(r) for r in t.lookup({"id": 7}).collect()] == [(7, "v7")]
+    t.commit_rewrite(rows.withColumn("bucket", bucket_of(5, "id")), [], num_buckets=5)
+    assert [tuple(r) for r in t.lookup({"id": 7}).collect()] == [(7, "v7")]
+    assert [tuple(r) for r in t.lookup({"id": 8}, version=1).collect()] == [(8, "v8")]
+
+
+def test_lookup_runs_one_spark_job(spark, tmp_table_dir):
+    """Finding the key's bucket runs no job: collecting a lookup is the
+    single scan job."""
+    from tests.test_store_jobs import _count_jobs
+
+    t = LakeTable.create(spark, tmp_table_dir, SCHEMA, num_buckets=8)
+    rows = [(f"r{i}", f"p{i}", i) for i in range(50)]
+    df = _with_bucket(spark.createDataFrame(rows, SCHEMA), 8)
+    t.commit_rewrite(df, list(range(8)))
+    got, jobs = _count_jobs(spark, lambda: t.lookup({"repo": "r7", "path": "p7"}).collect())
+    assert [(r["repo"], r["path"], r["v"]) for r in got] == [("r7", "p7", 7)]
+    assert jobs == 1

@@ -31,8 +31,10 @@ N_BASE = 500
 N_BATCH = 25
 NEW_ID = 1_000_000
 
-DEDUP_JOB_BUDGET = 25
-ANN_JOB_BUDGET = 10
+# measured 18 and 7: a small lake commit is one Arrow collect and the
+# batch's bucket list one aggregate in one task
+DEDUP_JOB_BUDGET = 18
+ANN_JOB_BUDGET = 7
 
 # (id_a, id_b, jaccard) returned for the 25-document batch below
 EXPECTED_PAIRS = {
@@ -181,12 +183,17 @@ def test_rebalance_widens_a_one_partition_scan_and_leaves_a_small_batch(spark, w
     assert out is small
 
 
-def test_compact_of_many_small_files_runs_two_jobs(spark, workdir):
-    """One scan over every compacted file plus one write: a shuffle-map
-    job and a write job. The scan names 96 files, and Spark's default
-    would first list more than 32 explicit paths in a job of its own."""
+def test_compact_of_many_small_files_runs_two_jobs(spark, workdir, monkeypatch):
+    """One scan over every compacted file plus one write through Spark's
+    writer (forced: these bytes are under ``DRIVER_WRITE_BYTES``): a
+    shuffle-map job and a write job. The scan names 96 files, and Spark's
+    default would first list more than 32 explicit paths in a job of its
+    own."""
     from pyspark.sql import types as T
 
+    from embulk_input_mixpanel_spark.sources import lake
+
+    monkeypatch.setattr(lake, "DRIVER_WRITE_BYTES", -1)
     schema = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
     t = LakeTable.create(spark, os.path.join(workdir, "tbl"), schema, num_buckets=32)
     for i in range(3):
@@ -198,3 +205,59 @@ def test_compact_of_many_small_files_runs_two_jobs(spark, workdir):
     assert jobs <= 2
     assert stats["files_in"] == files_in and stats["buckets_compacted"] == 32
     assert all(len(fl) == 1 for fl in snap.files.values())
+
+
+def test_small_commit_append_and_compact_run_one_job_each(spark, inputs, workdir):
+    """A 25-row append into 32 buckets and the compaction of what three
+    such appends left are each one Spark job: the driver writes the
+    files from one Arrow collect. The compaction scan names more than 32
+    files, so a file-listing job would show here too."""
+    from pyspark.sql import types as T
+
+    from embulk_input_mixpanel_spark.session import DRIVER_WRITE_BYTES
+
+    _, batch, _, _ = inputs
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("text", T.StringType())])
+    t = LakeTable.create(spark, os.path.join(workdir, "tbl"), schema, num_buckets=32)
+    for i in range(3):
+        new = _staged(spark, workdir, f"b{i}", batch, "docs")
+        snap, jobs = _count_jobs(
+            spark, lambda: t.commit_append(new.withColumn("bucket", t.bucket_expr("doc_id")))
+        )
+        assert jobs <= 1, jobs
+    assert max(len(fl) for fl in snap.files.values()) == 3
+    assert len(snap.all_files()) > 32
+    nbytes = sum(os.path.getsize(os.path.join(t.path, f)) for f in snap.all_files())
+    assert nbytes <= DRIVER_WRITE_BYTES
+    (snap, stats), jobs = _count_jobs(spark, lambda: t.compact(min_files=2))
+    assert jobs <= 1, jobs
+    assert all(len(fl) == 1 for fl in snap.files.values())
+    assert t.read().count() == 3 * N_BATCH
+
+
+def test_lake_buckets_of_equals_distinct_on_a_multi_partition_frame(spark, workdir):
+    from pyspark.sql import functions as F
+
+    from embulk_input_mixpanel_spark.sources.lake import bucket_of, lake_buckets_of
+
+    t = LakeTable.create(spark, os.path.join(workdir, "tbl"), _id_schema(), num_buckets=64)
+    for frame in (
+        spark.range(0, 5000, 7, numPartitions=6),
+        spark.range(40, numPartitions=3).repartition(5),
+        spark.range(0).repartition(2),
+    ):
+        assert frame.rdd.getNumPartitions() > 1
+        want = sorted(
+            r["b"] for r in frame.select(bucket_of(64, "id").alias("b")).distinct().collect()
+        )
+        assert lake_buckets_of(frame, t, "id") == want
+    # one bucket per key, hashed as the writer hashes it
+    one = spark.range(3, 4).select(F.col("id"))
+    assert lake_buckets_of(one, t, "id") == [one.select(t.bucket_expr("id")).first()[0]]
+
+
+def _id_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType([T.StructField("id", T.LongType())])
