@@ -40,8 +40,19 @@ aggregation and the write layout share a single exchange. The winners
 DataFrame is deliberately NOT persisted: a columnar cache of map-typed
 rows costs more (build + GC) than the narrow recompute. Under AQE each
 exchange of an action is a Spark job of its own, so the three actions
-schedule 8 jobs per batch (measured by ``perfbench/run.py --workload
-replay_tail --trace 1``: 2k-event batches into a 16-bucket table).
+schedule 8 jobs per batch (``tests/test_replay_jobs.py``; 2k-event
+batches into a 16-bucket table).
+
+Every count in :class:`ApplyResult` comes from those actions or from
+files, so batch replays and foreachBatch epochs report the same numbers:
+
+- ``rows_in``, ``rows_skipped_hwm`` and the HWM advance: action (1).
+- ``keys_upserted``: action (2). Its prop keys are exploded with
+  ``posexplode_outer``; a narrow winner yields exactly one row whose
+  position is 0 or null (no props), and those rows are counted.
+- ``rows_in_touched_after``: the parquet footers of the files the commit
+  wrote for the touched buckets (:meth:`LakeTable.footer_rows`), read by
+  the driver; tombstones included, no Spark job.
 """
 
 from __future__ import annotations
@@ -50,11 +61,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import content_sha
 from ..plans.checkpoint import checkpoint_properties, get_cursor, get_hwm_map
 from ..plans.windows import Batch
 from ..sources.lake import LakeTable
@@ -98,7 +108,6 @@ class ApplyResult:
     version: int
     rows_in: int
     rows_skipped_hwm: int
-    distinct_events: int
     keys_upserted: int
     rows_in_touched_after: int
     touched_buckets: int
@@ -127,17 +136,11 @@ def apply_batch(
     batch: Batch,
     promoted_keys: list[str] | None = None,
     auto_evolve: bool = True,
-    count_distinct_events: bool = False,
-    observe_metrics: bool = True,
     hwm_skip: bool = True,
     reserved_keys: list[str] | None = None,
     writer_id: str = "",
 ) -> ApplyResult:
     """Apply one planned batch of change events to the lake table.
-
-    ``count_distinct_events`` adds an exact distinct-event_id count to the
-    metrics job — off by default; redeliveries collapse in the latest-wins
-    reduction regardless.
 
     ``reserved_keys`` is the KNOWN_KEYS analog (reference:
     export_service.rb:14-18): property keys that are system metadata, not
@@ -168,25 +171,21 @@ def apply_batch(
         (F.col("event_seq") > F.lit(batch.lo)) & (F.col("event_seq") <= F.lit(batch.hi))
     )
 
-    # --- metrics + HWM pre-aggregation (column-pruned: 3 narrow columns) ---
+    # --- metrics + HWM pre-aggregation (column-pruned: 2 narrow columns) ---
     keep = _hwm_filter(hwm_before) if hwm_skip else F.lit(True)
-    aggs = [
-        F.count("*").alias("n"),
-        F.sum(F.when(~keep, 1).otherwise(0)).alias("n_skipped"),
-        F.max("event_seq").alias("max_seq"),
-    ]
-    if count_distinct_events:
-        aggs.append(F.count_distinct("event_id").alias("n_distinct"))
     stats = (
-        bounded.select("source_partition", "event_seq", "event_id")
+        bounded.select("source_partition", "event_seq")
         .groupBy("source_partition")
-        .agg(*aggs)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.when(~keep, 1).otherwise(0)).alias("n_skipped"),
+            F.max("event_seq").alias("max_seq"),
+        )
         .collect()
     )
     timings["metrics"] = round(time.time() - t0, 3)
     rows_in = sum(r["n"] for r in stats)
     rows_skipped = sum(r["n_skipped"] for r in stats)
-    distinct_events = sum(r["n_distinct"] for r in stats) if count_distinct_events else -1
     hwm_after = dict(hwm_before)
     for r in stats:
         p, mx = int(r["source_partition"]), int(r["max_seq"])
@@ -199,7 +198,7 @@ def apply_batch(
     if rows_in - rows_skipped == 0:
         snap = table.commit_properties(props, expected_version=planned_version)
         return ApplyResult(
-            batch.index, True, snap.version, rows_in, rows_skipped, distinct_events,
+            batch.index, True, snap.version, rows_in, rows_skipped,
             0, 0, 0, [], hwm_before, hwm_after, time.time() - t0,
         )
 
@@ -230,11 +229,14 @@ def apply_batch(
         .withColumn("_pm", F.from_json("props", T.MapType(T.StringType(), T.StringType())))
         .withColumn("bucket", F.pmod(F.xxhash64("repo", "path"), F.lit(nb)).cast("int"))
     )
+    # one row per (winner, prop key), and exactly one per winner at
+    # position 0 (or null: no props) — so the winner count rides along
     disc = (
-        w_narrow.select("bucket", F.explode_outer(F.map_keys("_pm")).alias("k"))
+        w_narrow.select("bucket", F.posexplode_outer(F.map_keys("_pm")).alias("pos", "k"))
         .agg(
             F.collect_set("bucket").alias("buckets"),
             F.collect_set("k").alias("keys"),
+            F.count(F.when(F.coalesce(F.col("pos"), F.lit(0)) == 0, 1)).alias("n_winners"),
         )
         .first()
     )
@@ -258,11 +260,7 @@ def apply_batch(
         "commit",
         "lang",
         "content",
-        # JVM sha2 by default; SPARK_GRAFT_SHA=pandas switches to the
-        # Arrow pandas-UDF variant (functions/hashing.py) whose process
-        # workers dodge the MessageDigest lookup contention that bites the
-        # JVM expression at high thread counts x tens of millions of calls.
-        content_sha("content").alias("content_sha"),
+        F.sha2(F.col("content"), 256).alias("content_sha"),
         "commit_seq",
         "event_seq",
         "event_id",
@@ -283,14 +281,6 @@ def apply_batch(
     # tombstones included: stored deletes must keep beating staler updates
     target = table.read(buckets=touched, include_tombstones=True)
 
-    # Observation.get blocks forever inside a foreachBatch epoch (the
-    # listener never fires for nested actions), so streaming callers
-    # disable it and accept -1 metrics.
-    obs_keys = obs_out = None
-    if observe_metrics:
-        obs_keys = Observation("keys")
-        payload = payload.observe(obs_keys, F.count(F.lit(1)).alias("n_winners"))
-
     # single-shuffle MERGE: the union is repartitioned by the storage
     # bucket ONCE; the latest-wins aggregation (keyed bucket+repo+path,
     # bucket functionally determined by the key) then needs no exchange of
@@ -307,10 +297,6 @@ def apply_batch(
         pre_repartition=(max(len(touched), 1), ["bucket"]),
     )
 
-    if observe_metrics:
-        obs_out = Observation("out")
-        merged = merged.observe(obs_out, F.count(F.lit(1)).alias("n_out"))
-
     snap = table.commit_rewrite(
         merged, touched, properties=props, schema=out_schema,
         expected_version=planned_version,
@@ -323,9 +309,8 @@ def apply_batch(
         version=snap.version,
         rows_in=rows_in,
         rows_skipped_hwm=rows_skipped,
-        distinct_events=distinct_events,
-        keys_upserted=int(obs_keys.get["n_winners"]) if obs_keys else -1,
-        rows_in_touched_after=int(obs_out.get["n_out"]) if obs_out else -1,
+        keys_upserted=int(disc["n_winners"]),
+        rows_in_touched_after=table.footer_rows(snap, touched),
         touched_buckets=len(touched),
         new_prop_keys=new_keys,
         hwm_before=hwm_before,

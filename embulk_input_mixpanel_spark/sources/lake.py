@@ -350,6 +350,17 @@ class LakeTable:
             df = df.filter((F.col("op").isNull()) | (F.col("op") != "D"))
         return df
 
+    def footer_rows(self, snap: Snapshot, buckets: list[int]) -> int:
+        """Rows in ``buckets`` at ``snap``, tombstones included: the sum of
+        the parquet footers' ``num_rows``, read by the driver with pyarrow
+        (O(files) footer reads, no Spark job). Equal to
+        ``read(snap.version, buckets, include_tombstones=True).count()``."""
+        want = {str(b) for b in buckets}
+        return sum(
+            pq.read_metadata(os.path.join(self.path, f)).num_rows
+            for b, fl in snap.files.items() if b in want for f in fl
+        )
+
     def bucket_expr(self, *key_cols: str) -> Column:
         return bucket_of(self.num_buckets, *key_cols)
 

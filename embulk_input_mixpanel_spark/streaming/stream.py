@@ -14,6 +14,12 @@ Two checkpoint layers cooperate:
   a foreachBatch epoch is replayed after a crash (the known at-least-once
   hole in foreachBatch is closed by the row-level HWM filter + latest-wins
   merge, the same mechanism that absorbs backfill overlap).
+
+Every committed epoch appends one lineage row (``plans/metrics.py``), as
+``runner.replay`` does per batch, with the same counts: ``apply_batch``
+takes them from its own actions and the written files' footers, so no
+count waits on a query listener (which never fires for the nested
+actions of a foreachBatch epoch).
 """
 
 from __future__ import annotations
@@ -21,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.retry import with_retry
-from ..operators.apply import apply_batch
+from ..operators.apply import ApplyResult, apply_batch
 from ..plans.checkpoint import get_cursor
+from ..plans.metrics import record_lineage
 from ..plans.windows import Batch
 from ..sources.lake import LakeTable
 
@@ -65,13 +72,10 @@ def stream_replay(
     stream = reader.load(source_path)
 
     @with_retry(limit=retry_limit, initial_wait=retry_wait)
-    def _apply_once(batch_df: DataFrame, batch: Batch) -> None:
+    def _apply_once(batch_df: DataFrame, batch: Batch) -> ApplyResult:
         # hwm_skip off: file tails deliver in arbitrary seq order; the
         # latest-wins merge alone guarantees idempotence/correctness
-        apply_batch(
-            table, batch_df, batch,
-            observe_metrics=False, hwm_skip=False, writer_id=writer_id,
-        )
+        return apply_batch(table, batch_df, batch, hwm_skip=False, writer_id=writer_id)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as F
@@ -83,7 +87,7 @@ def stream_replay(
             return
         cursor = get_cursor(table, writer_id)
         batch = Batch(index=int(epoch_id), lo=min(bounds["lo"] - 1, cursor), hi=int(bounds["hi"]))
-        _apply_once(batch_df, batch)
+        record_lineage(table.path, _apply_once(batch_df, batch))
 
     (
         stream.writeStream.foreachBatch(_apply)

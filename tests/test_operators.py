@@ -1,4 +1,4 @@
-"""Dedup / text / similarity / multimodal operator semantics."""
+"""Dedup / text / similarity operator semantics."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,12 +15,6 @@ from embulk_input_mixpanel_spark.operators.dedup import (
     simhash,
     simhash_pairs,
     simhash_pairs_banded,
-)
-from embulk_input_mixpanel_spark.operators.multimodal import (
-    extract_features_stub,
-    frame_sample_stub,
-    resize_stub,
-    synth_media,
 )
 from embulk_input_mixpanel_spark.operators.similarity import brute_force_topk, lsh_bucket_candidates
 from embulk_input_mixpanel_spark.operators.text import lang_id, quality_features, rolling_fingerprint
@@ -250,45 +244,6 @@ def test_ivf_kmeans_refinement_improves_quantization(spark):
     assert m2 >= m1 - 1e-9
 
 
-def test_multimodal_stub_plumbing(spark):
-    media = synth_media(spark, 50, payload_bytes=1024)
-    feats = extract_features_stub(media, feature_dim=4)
-    rows = feats.collect()
-    assert len(rows) == 50
-    assert all(len(r["feature"]) == 4 for r in rows)
-    assert all(r["n_bytes"] == 1024 for r in rows)
-    # deterministic: same input -> same features
-    again = {r["media_id"]: r["feature"] for r in extract_features_stub(media, feature_dim=4).collect()}
-    assert all(again[r["media_id"]] == r["feature"] for r in rows)
-
-
-def test_multimodal_resize_dims_and_bytes(spark):
-    media = synth_media(spark, 40, payload_bytes=2048)
-    out = resize_stub(media, max_edge=128).collect()
-    assert len(out) == 40
-    dims = {r["media_id"]: (r["out_width"], r["out_height"]) for r in out}
-    src = {r["media_id"]: (r["width"], r["height"]) for r in media.collect()}
-    for mid, (ow, oh) in dims.items():
-        w, h = src[mid]
-        scale = min(128 / max(w, h), 1.0)  # aspect-preserving, never upscaled
-        assert (ow, oh) == (max(int(w * scale), 1), max(int(h * scale), 1))
-    assert all(0 < len(r["payload"]) <= 2048 for r in out)
-
-
-def test_multimodal_frame_sampling_expands_videos_only(spark):
-    media = synth_media(spark, 30, payload_bytes=1024)
-    n_videos = media.filter("mime = 'video/mp4'").count()
-    frames = frame_sample_stub(media, n_frames=4, fps_ms=40).collect()
-    assert len(frames) == n_videos * 4
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for rows in by_media.values():
-        assert sorted(r["frame_idx"] for r in rows) == [0, 1, 2, 3]
-        assert sorted(r["ts_ms"] for r in rows) == [0, 40, 80, 120]
-        assert all(len(r["frame"]) > 0 for r in rows)
-
-
 # ---------------------------------------------------------------------------
 # Round-3 hardening: bucket caps, convergence guards, brute-force guards
 # ---------------------------------------------------------------------------
@@ -434,191 +389,6 @@ def test_group_percentiles_auto_tier_selection(spark):
     assert "approx_percentile" in plan and "partial_approx_percentile" in plan
     with pytest.raises(ValueError, match="mode"):
         group_percentiles(ev, ["event_type"], "value", mode="bogus")
-
-
-def test_codecs_png_wav_roundtrip():
-    """Pure-Python codecs: encode -> decode recovers dims/rate/samples."""
-    from embulk_input_mixpanel_spark.functions.codecs import (
-        decode_png, decode_wav, encode_png, encode_wav, sniff_mp4_brand,
-    )
-
-    png = encode_png(5, 7, bytes((i * 37) % 256 for i in range(35)))
-    d = decode_png(png)
-    assert (d["width"], d["height"], d["n_samples"]) == (5, 7, 35)
-    assert d["mean_value"] == sum((i * 37) % 256 for i in range(35)) / 35
-    with pytest.raises(ValueError, match="signature"):
-        decode_png(b"not a png at all")
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(png[:-5] + bytes(5))  # corrupt the IEND CRC
-    wav = encode_wav([0, 100, -100, 500], sample_rate=8000)
-    w = decode_wav(wav)
-    assert (w["sample_rate"], w["n_samples"], w["channels"]) == (8000, 4, 1)
-    assert w["mean_value"] == (0 + 100 + 100 + 500) / 4
-    assert sniff_mp4_brand(b"\x00\x00\x00\x14ftypisom\x00\x00\x02\x00isom") == "isom"
-
-
-def test_decode_real_on_real_payloads(spark):
-    """decode_real decodes REAL bytes distributed through mapInPandas:
-    PNGs yield verified dims + mean pixel, WAVs yield rate + samples, MP4s
-    demux the container (sample table walked; track dims + sample count
-    recovered) and declare the pixel-decode boundary, corrupt payloads
-    quarantine with an error instead of failing the job."""
-    from embulk_input_mixpanel_spark.operators.multimodal import (
-        decode_real, synth_media_real,
-    )
-
-    media = synth_media_real(spark, 30, seed=7)
-    out = {r["media_id"]: r for r in decode_real(media).collect()}
-    assert len(out) == 30
-    src = {r["media_id"]: r for r in media.collect()}
-    for mid, r in out.items():
-        if r["mime"] == "image/png":
-            assert r["decoded"] and (r["width"], r["height"]) == (
-                src[mid]["width"], src[mid]["height"])
-            assert r["n_samples"] == r["width"] * r["height"]
-            assert 0.0 <= r["mean_value"] <= 255.0
-        elif r["mime"] == "audio/wav":
-            assert r["decoded"] and r["sample_rate"] == 16000 and r["n_samples"] == 256
-        else:
-            # 'png ' video track: FULL pixel decode, no declared boundary
-            assert r["decoded"] and r["brand"] == "isom"
-            assert (r["width"], r["height"]) == (
-                src[mid]["width"], src[mid]["height"])
-            assert 3 <= r["n_samples"] <= 8  # synth emits 3..8 frames
-            assert r["error"] is None
-            # exact mean pixel value, recomputed from the generator law
-            rnd = (7 * 1_000_003 + mid) & 0x7FFFFFFF
-            w, h = 4 + (rnd % 13), 4 + ((rnd >> 8) % 13)
-            n_fr = 3 + (rnd % 6)
-            px = [
-                ((rnd >> 2) + 13 * f + i) % 256
-                for f in range(n_fr) for i in range(w * h)
-            ]
-            assert r["mean_value"] == pytest.approx(sum(px) / len(px))
-    # a non-PNG fourcc still demuxes but declares the pixel boundary
-    from embulk_input_mixpanel_spark.functions.codecs import encode_mp4
-    opaque = spark.createDataFrame(
-        [(98, "video/mp4", 0, 0, bytearray(encode_mp4([b"raw-au-1", b"raw-au-2"])))],
-        "media_id long, mime string, width int, height int, payload binary",
-    )
-    orow = decode_real(opaque).collect()[0]
-    assert orow["decoded"] and "'mp4v'" in orow["error"]
-    # corrupt payload -> quarantined row, not a job failure
-    bad = spark.createDataFrame(
-        [(99, "image/png", 0, 0, bytearray(b"garbage"))],
-        "media_id long, mime string, width int, height int, payload binary",
-    )
-    row = decode_real(bad).collect()[0]
-    assert not row["decoded"] and "signature" in row["error"]
-
-
-def test_mp4_mux_demux_roundtrip():
-    """ISO BMFF mux -> demux recovers every sample's exact byte range and
-    timestamp, across multi-chunk layouts, a short tail chunk, and the
-    single-run case; structural corruption raises instead of mis-slicing."""
-    from embulk_input_mixpanel_spark.functions.codecs import demux_mp4, encode_mp4
-
-    frames = [bytes([i] * (10 + 3 * i)) for i in range(7)]
-    mp4 = encode_mp4(frames, width=64, height=48, frames_per_chunk=3)
-    d = demux_mp4(mp4)
-    assert (d["brand"], d["width"], d["height"]) == ("isom", 64, 48)
-    assert d["n_samples"] == 7 and d["timescale"] == 1000 and d["duration"] == 280
-    for i, (off, size, ts) in enumerate(d["samples"]):
-        assert mp4[off : off + size] == frames[i]
-        assert ts == i * 40
-    # one full chunk exactly (single stsc run)
-    d2 = demux_mp4(encode_mp4(frames[:4], frames_per_chunk=4))
-    assert d2["n_samples"] == 4
-    with pytest.raises(ValueError):
-        demux_mp4(mp4[:40])  # truncated inside mdat
-    with pytest.raises(ValueError):
-        demux_mp4(b"\x00" * 32)  # no ftyp
-
-
-def test_frame_sample_real_extracts_true_access_units(spark):
-    """frame_sample_real emits the REAL access-unit bytes at REAL
-    presentation timestamps for every video in the table (uniform picks,
-    ids preserved); non-video rows contribute nothing; corrupt videos are
-    skipped here (decode_real is the quarantine surface)."""
-    from embulk_input_mixpanel_spark.functions.codecs import demux_mp4
-    from embulk_input_mixpanel_spark.operators.multimodal import (
-        frame_sample_real, synth_media_real,
-    )
-
-    media = synth_media_real(spark, 30, seed=11)
-    vids = {
-        r["media_id"]: bytes(r["payload"])
-        for r in media.filter("mime = 'video/mp4'").collect()
-    }
-    rows = frame_sample_real(media, n_frames=3).collect()
-    assert {r["media_id"] for r in rows} == set(vids)
-    for r in rows:
-        d = demux_mp4(vids[r["media_id"]])
-        off, size, ts_units = d["samples"][r["frame_idx"]]
-        assert bytes(r["frame"]) == vids[r["media_id"]][off : off + size]
-        assert r["ts_ms"] == int(ts_units * 1000 / d["timescale"])
-    by_media: dict[int, int] = {}
-    for r in rows:
-        by_media[r["media_id"]] = by_media.get(r["media_id"], 0) + 1
-    assert all(1 <= c <= 3 for c in by_media.values())
-    # corrupt video row -> zero frames, no failure
-    bad = spark.createDataFrame(
-        [(7, "video/mp4", 0, 0, bytearray(b"\x00\x00\x00\x14ftypisomgarbage"))],
-        "media_id long, mime string, width int, height int, payload binary",
-    )
-    assert frame_sample_real(bad).count() == 0
-
-
-def test_frame_decode_real_pixel_decodes_png_video(spark):
-    """demux -> uniform frame sample -> PIXEL decode, end-to-end with zero
-    external libraries: synth 'png ' video tracks carry real PNG access
-    units, so every sampled frame yields true dims + an exact mean luma
-    (recomputed from the generator law); a non-PNG access unit
-    quarantines per-frame instead of failing the job."""
-    from embulk_input_mixpanel_spark.operators.multimodal import (
-        frame_decode_real, frame_sample_real, synth_media_real,
-    )
-
-    seed = 13
-    media = synth_media_real(spark, 30, seed=seed)
-    rows = frame_decode_real(frame_sample_real(media, n_frames=3)).collect()
-    assert rows and all(r["decoded"] for r in rows)
-    for r in rows:
-        rnd = (seed * 1_000_003 + r["media_id"]) & 0x7FFFFFFF
-        w, h = 4 + (rnd % 13), 4 + ((rnd >> 8) % 13)
-        assert (r["width"], r["height"]) == (w, h)
-        f = r["frame_idx"]
-        px = [((rnd >> 2) + 13 * f + i) % 256 for i in range(w * h)]
-        assert r["mean_luma"] == pytest.approx(sum(px) / len(px))
-        assert r["ts_ms"] == f * 40  # 25 fps default timescale
-    # an mp4v (opaque access unit) frame quarantines per-frame
-    from embulk_input_mixpanel_spark.functions.codecs import encode_mp4
-    opaque = spark.createDataFrame(
-        [(5, "video/mp4", 0, 0, bytearray(encode_mp4([b"not-a-png"])))],
-        "media_id long, mime string, width int, height int, payload binary",
-    )
-    q = frame_decode_real(frame_sample_real(opaque)).collect()
-    assert len(q) == 1 and not q[0]["decoded"] and "signature" in q[0]["error"]
-
-
-def test_multimodal_sizing_never_full_scans_payload(spark, tmp_table_dir):
-    """The pre-pass sizing must not read the payload column end-to-end:
-    over a parquet-backed media table (the real case — sizes unknown to
-    the optimizer) the sample aggregate keeps its Limit, bounding how much
-    of the binary column the probe can read."""
-    from embulk_input_mixpanel_spark.operators.multimodal import _SIZE_SAMPLE_ROWS
-
-    synth_media(spark, 500, payload_bytes=2048).write.mode("overwrite").parquet(
-        f"{tmp_table_dir}/media.parquet"
-    )
-    media = spark.read.parquet(f"{tmp_table_dir}/media.parquet")
-    probe = (
-        media.select(F.length("payload").alias("_l"))
-        .limit(_SIZE_SAMPLE_ROWS)
-        .agg(F.avg("_l"))
-    )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "Limit" in plan or "CollectLimit" in plan, plan
 
 
 def test_neardup_gate_data_clears_marginal_recall_band(spark):

@@ -1,4 +1,4 @@
-"""JSONL source contract, hashing parity, timezone edges, retry, guess."""
+"""JSONL source contract, content-hash parity, timezone edges, retry, guess."""
 
 import json
 import os
@@ -6,7 +6,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from embulk_input_mixpanel_spark.functions.hashing import sha256_hex, sha256_hex_jvm
 from embulk_input_mixpanel_spark.functions.retry import FatalError, with_retry
 from embulk_input_mixpanel_spark.functions.timeconv import DROP, SHIFT, epoch_local_adjust, ms_to_s
 from embulk_input_mixpanel_spark.sources.jsonl import (
@@ -82,14 +81,15 @@ def test_probe_all_empty_raises(spark):
 
 
 def test_sha_implementations_agree(spark):
-    df = spark.createDataFrame([("hello",), ("",), ("unicode ✓ ok",)], ["s"])
-    rows = df.select(
-        sha256_hex("s").alias("py"), sha256_hex_jvm("s").alias("jvm")
-    ).collect()
-    assert all(r["py"] == r["jvm"] for r in rows)
+    """The engine's ``content_sha`` (JVM ``sha2(content, 256)``) is the
+    oracle's ``hashlib.sha256`` of the UTF-8 bytes, and null stays null."""
     import hashlib
 
-    assert rows[0]["py"] == hashlib.sha256(b"hello").hexdigest()
+    values = ["hello", "", "unicode ✓ ok — naïve 日本語 🚀", None]
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    got = [r["h"] for r in df.select(F.sha2(F.col("s"), 256).alias("h")).collect()]
+    want = [None if v is None else hashlib.sha256(v.encode("utf-8")).hexdigest() for v in values]
+    assert got == want
 
 
 def test_ms_to_s_only_positive(spark):
