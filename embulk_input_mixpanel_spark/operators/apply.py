@@ -67,7 +67,7 @@ from pyspark.sql import types as T
 
 from ..plans.checkpoint import checkpoint_properties, get_cursor, get_hwm_map
 from ..plans.windows import Batch
-from ..sources.lake import LakeTable
+from ..sources.lake import LakeTable, bucket_of
 from .merge import latest_wins, merge_upsert
 
 __all__ = ["apply_batch", "ApplyResult", "base_table_schema", "KEY_COLS", "ORDER_COLS"]
@@ -205,11 +205,11 @@ def apply_batch(
     survivors = bounded.filter(keep)
 
     # --- latest-wins reduction (one shuffle; partial agg kills skew) ---
-    nb = table.num_buckets
+    bucket = bucket_of(table.num_buckets, *KEY_COLS)
     winners = (
         latest_wins(survivors, KEY_COLS, ORDER_COLS, tiebreak_col="event_id")
         .withColumn("_pm", F.from_json("props", T.MapType(T.StringType(), T.StringType())))
-        .withColumn("bucket", F.pmod(F.xxhash64("repo", "path"), F.lit(nb)).cast("int"))
+        .withColumn("bucket", bucket)
     )
 
     # --- one combined discovery pass: touched buckets + new prop keys ---
@@ -227,7 +227,7 @@ def apply_batch(
     w_narrow = (
         latest_wins(narrow, KEY_COLS, ORDER_COLS, tiebreak_col="event_id")
         .withColumn("_pm", F.from_json("props", T.MapType(T.StringType(), T.StringType())))
-        .withColumn("bucket", F.pmod(F.xxhash64("repo", "path"), F.lit(nb)).cast("int"))
+        .withColumn("bucket", bucket)
     )
     # one row per (winner, prop key), and exactly one per winner at
     # position 0 (or null: no props) — so the winner count rides along
@@ -290,7 +290,7 @@ def apply_batch(
     tgt = target.withColumn(
         "bucket", F.col("bucket").cast("int")
     ) if "bucket" in target.columns else target.withColumn(
-        "bucket", F.pmod(F.xxhash64("repo", "path"), F.lit(nb)).cast("int")
+        "bucket", bucket
     )
     merged = merge_upsert(
         tgt, payload, ["bucket", *KEY_COLS], ORDER_COLS,

@@ -32,9 +32,12 @@ Three lake tables:
   it is bucketed by cluster, which a new vector's id says nothing
   about). Mirrors IncrementalDeduper's sigs-table pruning.
 - ``deleted`` (id long, batch_seq long), bucket = id — the takedown
-  registry: :meth:`delete` appends ids O(batch); probes mask them
-  immediately; :meth:`purge_deleted` / :meth:`retrain` drop the vector
-  rows physically. Rows are kept forever (no-reingest memory).
+  registry shared with IncrementalDeduper (operators/maintenance.py):
+  :meth:`delete` appends ids O(batch); probes mask them immediately;
+  :meth:`purge_deleted` / :meth:`retrain` drop the vector rows
+  physically, and the purge advances the registry's ``purged_seq``
+  watermark with a properties-only commit. Rows are kept forever
+  (no-reingest memory).
 
 Crash consistency (:meth:`recover`, called at the top of
 :meth:`add_batch` and :meth:`maintain`):
@@ -69,6 +72,15 @@ from pyspark.sql import types as T
 
 from ..sources.lake import ConcurrentCommitError, LakeTable, lake_buckets_of
 from .dedup import _rebalance
+from .maintenance import (
+    compact_and_expire,
+    mark_purged,
+    open_registry,
+    pending_takedowns,
+    purge_buckets,
+    register_takedowns,
+    without_takedowns,
+)
 from .similarity import _cosine_n, _norm, _to_double
 
 __all__ = ["IncrementalANN"]
@@ -98,17 +110,6 @@ _ID_SCHEMA = T.StructType(
     ]
 )
 
-# takedown registry (same shape as the deduper's): ids whose vectors are
-# deleted. Rows kept forever (no-reingest memory; the ids table already
-# blocks re-ingest of previously-stored ids, but a PRE-emptive delete of a
-# not-yet-delivered id must block too); purged_seq tracks physical purging.
-_DELETED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("batch_seq", T.LongType()),
-    ]
-)
-
 
 class IncrementalANN:
     """Persistent IVF index + per-batch ingest + bucket-pruned probes."""
@@ -130,11 +131,9 @@ class IncrementalANN:
         cent_path = os.path.join(self.path, "cent")
         vec_path = os.path.join(self.path, "vectors")
         ids_path = os.path.join(self.path, "ids")
-        del_path = os.path.join(self.path, "deleted")
         self.cent = LakeTable(spark, cent_path)
         self.vectors = LakeTable(spark, vec_path)
         self.ids = LakeTable(spark, ids_path)
-        self.deleted = LakeTable(spark, del_path)
         if not self.cent.exists():
             self.n_centroids = 8 if n_centroids is None else int(n_centroids)
             self.cent = LakeTable.create(
@@ -172,14 +171,10 @@ class IncrementalANN:
                     rows.withColumn("bucket", self.ids.bucket_expr("id")),
                     properties={"batch_seq": vec_seq},
                 )
-        if not self.deleted.exists():
-            # same num_buckets as ids so the batch's id-bucket list prunes
-            # both the known-id and the takedown reads with one job
-            self.deleted = LakeTable.create(
-                spark, del_path, _DELETED_SCHEMA,
-                num_buckets=self.ids.num_buckets,
-                properties={"batch_seq": 0, "purged_seq": 0},
-            )
+        # shares ids' num_buckets: one id-bucket list prunes both reads
+        self.deleted = open_registry(
+            spark, os.path.join(self.path, "deleted"), self.ids
+        )
 
     # ------------------------------------------------------------ internals
 
@@ -198,19 +193,28 @@ class IncrementalANN:
         # ranks the n_centroids survivors — never a global sort
         low = vecs.orderBy("id").limit(self.n_centroids)
         w = Window.orderBy("id")
-        cent = (
+        self._commit_centroids(
             low.withColumn("_rn", F.row_number().over(w))
             .select(
                 (F.col("_rn") - 1).cast("int").alias("centroid_id"),
                 F.col("v").alias("cv"),
             )
         )
+
+    def _commit_centroids(self, cent: DataFrame, **properties: Any) -> None:
+        """Replace the centroids with ``cent`` and bump their epoch."""
         epoch = int(self.cent.properties.get("epoch", 0)) + 1
         self.cent.commit_rewrite(
             cent.withColumn("bucket", F.lit(0)),
             touched_buckets=[0],
-            properties={"trained": True, "epoch": epoch},
+            properties={"trained": True, "epoch": epoch, **properties},
             expected_version=self.cent.version,
+        )
+
+    def _live_corpus(self) -> DataFrame:
+        """(id, v, batch_seq) of every stored vector not taken down."""
+        return without_takedowns(self.vectors.read(), self.deleted).select(
+            "id", "v", "batch_seq"
         )
 
     def _score_against_centroids(self, vecs: DataFrame) -> DataFrame:
@@ -273,14 +277,9 @@ class IncrementalANN:
         epoch = int(self.cent.properties.get("epoch", 0))
         nc = int(self.cent.properties.get("n_centroids", self.n_centroids))
         vec_v = self.vectors.version
-        # anti-join the takedown registry: the full rewrite doubles as a
-        # physical purge of deleted vectors
-        corpus = (
-            self.vectors.read()
-            .join(self.deleted.read().select("id"), "id", "left_anti")
-            .select("id", "v", "batch_seq")
-        )
-        newassign = self._score_against_centroids(corpus)
+        # the live corpus: the full rewrite doubles as a physical purge of
+        # deleted vectors
+        newassign = self._score_against_centroids(self._live_corpus())
         self.vectors.commit_rewrite(
             newassign.select(
                 "id", "v", "cluster", "cos_r", "batch_seq",
@@ -444,8 +443,8 @@ class IncrementalANN:
     def delete(self, ids, id_col: str = "vec_id") -> int:
         """Take down vectors: logically delete them from the index.
 
-        O(delete batch): one bucket-pruned idempotence anti-join + one
-        atomic append to the ``deleted`` registry. Effective immediately:
+        One append to the ``deleted`` registry
+        (:func:`~.maintenance.register_takedowns`). Effective immediately:
         probes stop returning the vectors (as neighbors OR queries), a
         redelivered deleted vector is never re-ingested, and the next
         :meth:`retrain` / :meth:`purge_deleted` / epoch reassign drops the
@@ -455,27 +454,7 @@ class IncrementalANN:
 
         ``ids``: DataFrame carrying ``id_col``, or an iterable of ints.
         Returns the number of ids newly recorded."""
-        if isinstance(ids, DataFrame):
-            want = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-        else:
-            want = self.spark.createDataFrame(
-                [(int(i),) for i in ids], "id BIGINT"
-            ).distinct()
-        del_v = self.deleted.version
-        seq = int(self.deleted.properties.get("batch_seq", 0)) + 1
-        pruned = lake_buckets_of(want, self.deleted, "id")
-        already = self.deleted.read(buckets=pruned).select("id")
-        fresh = want.join(already, "id", "left_anti").localCheckpoint(eager=True)
-        n = fresh.count()
-        if n == 0:
-            return 0
-        self.deleted.commit_append(
-            fresh.select("id", F.lit(seq).cast("long").alias("batch_seq"))
-            .withColumn("bucket", self.deleted.bucket_expr("id")),
-            properties={"batch_seq": seq},
-            expected_version=del_v,
-        )
-        return n
+        return register_takedowns(self.deleted, ids, id_col)
 
     def purge_deleted(self) -> dict[str, int]:
         """Physically drop deleted ids' vector rows (CoW of only the
@@ -487,17 +466,10 @@ class IncrementalANN:
         reads are already masked and ``purged_seq`` (advanced last) only
         skips work. ``ids`` rows are retained as no-reingest memory."""
         self.recover()
-        del_seq = int(self.deleted.properties.get("batch_seq", 0))
-        purged = int(self.deleted.properties.get("purged_seq", 0))
         out = {"purged_ids": 0, "vector_buckets_rewritten": 0}
-        if del_seq == purged:
+        targets, del_seq = pending_takedowns(self.deleted)
+        if targets is None:
             return out
-        targets = (
-            self.deleted.read()
-            .filter(F.col("batch_seq") > F.lit(purged))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
         # pinned to the version the keep-set is read at: a concurrent
         # append landing mid-purge aborts the purge instead of being
         # silently erased by the stale bucket rewrite
@@ -511,24 +483,12 @@ class IncrementalANN:
         )
         clusters = sorted(int(r["cluster"]) for r in hit.collect())
         if clusters:
-            keep = self.vectors.read(buckets=clusters).join(
-                targets, "id", "left_anti"
-            )
-            self.vectors.commit_rewrite(
-                keep.withColumn("bucket", F.col("cluster")),
-                touched_buckets=clusters,
-                expected_version=vec_v,
-            )
+            purge_buckets(self.vectors, clusters, targets, F.col("cluster"), vec_v)
             out.update(
                 purged_ids=targets.count(),
                 vector_buckets_rewritten=len(clusters),
             )
-        self.deleted.commit_append(
-            self.spark.createDataFrame([], self.deleted.schema).withColumn(
-                "bucket", F.lit(0)
-            ),
-            properties={"purged_seq": del_seq},
-        )
+        mark_purged(self.deleted, del_seq)
         return out
 
     # ---------------------------------------------------------------- query
@@ -645,28 +605,30 @@ class IncrementalANN:
         recover()'s reassign, which re-buckets as part of its
         roll-forward.
 
+        The vectors rewrite is :meth:`_reassign_all`, the same full
+        rewrite recover() runs. It re-reads the corpus AFTER the centroid
+        commit and pins the rewrite to the version of that read, so the
+        rewrite holds every vector appended up to that read — each scored
+        against the NEW centroids — and erases none appended after it.
+
         Concurrency contract: intended to run in a maintenance window.
         An ingest racing it loses exactly one side's optimistic guard —
-        either this retrain's vectors rewrite aborts
-        (ConcurrentCommitError; the epoch mismatch it leaves behind is
-        healed by recover(), which re-assigns against the NEW centroids,
-        so the aborted retrain still converges) or the ingest's append
-        aborts and retries against the retrained store. Never both
-        publish, never a torn layout that stays torn."""
+        either the ingest's append lands after the corpus read and this
+        retrain's vectors rewrite aborts (ConcurrentCommitError; the
+        epoch mismatch it leaves behind is healed by recover(), which
+        re-assigns against the NEW centroids, so the aborted retrain
+        still converges) or the ingest's append aborts and retries
+        against the retrained store. Never both publish, never a torn
+        layout that stays torn."""
         from .similarity import ivf_refine_assign
 
         self.recover()
         nc = self.n_centroids if n_centroids is None else int(n_centroids)
         if nc < 1:
             raise ValueError(f"n_centroids must be >= 1, got {nc}")
-        vec_v = self.vectors.version
         # takedowns are excluded from training AND physically dropped by
         # the rewrite (retrain doubles as a full purge)
-        corpus = (
-            self.vectors.read()
-            .join(self.deleted.read().select("id"), "id", "left_anti")
-            .select("id", "v", "batch_seq")
-        )
+        corpus = self._live_corpus()
         assign = ivf_refine_assign(
             corpus.select("id", "v"), n_centroids=nc,
             id_col="id", vec_col="v", iters=iters,
@@ -688,25 +650,8 @@ class IncrementalANN:
                 F.sort_array(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
             ).alias("cv")
         ).select(F.col("cluster").cast("int").alias("centroid_id"), "cv")
-        epoch = int(self.cent.properties.get("epoch", 0)) + 1
-        self.cent.commit_rewrite(
-            cent.withColumn("bucket", F.lit(0)), touched_buckets=[0],
-            properties={"trained": True, "epoch": epoch, "retrained_iters": iters,
-                        "n_centroids": nc},
-            expected_version=self.cent.version,
-        )
-        newassign = self._score_against_centroids(corpus)
-        self.vectors.commit_rewrite(
-            newassign.select(
-                "id", "v", "cluster", "cos_r", "batch_seq",
-                F.col("cluster").alias("bucket"),
-            ),
-            touched_buckets=list(range(nc)),
-            properties={"cent_epoch": epoch},
-            expected_version=vec_v,
-            num_buckets=nc,
-        )
-        self.n_centroids = nc
+        self._commit_centroids(cent, retrained_iters=iters, n_centroids=nc)
+        self._reassign_all()
 
     def maintain(self, max_files_per_bucket: int = 8, keep_snapshots: int = 10) -> dict:
         """Background maintenance: heal any interrupted commit sequence
@@ -714,22 +659,15 @@ class IncrementalANN:
         the roll-forward to misread history), then compact per-batch
         append files + expire superseded snapshots (same valve as
         IncrementalDeduper.maintain). Pending takedowns are physically
-        purged before compaction."""
+        purged before compaction. The ids index and the takedown registry
+        are compacted too: every add_batch known-id mask opens their
+        files."""
         recovered = self.recover()
         out: dict[str, Any] = {"recovered": recovered}
         out.update(self.purge_deleted())
-        _, st = self.vectors.compact(min_files=max_files_per_bucket + 1)
-        expired = self.vectors.expire_snapshots(keep_last=keep_snapshots)
-        out.update(
-            buckets_compacted=st["buckets_compacted"],
-            files_in=st["files_in"],
-            files_out=st["files_out"],
-            files_expired=len(expired),
-        )
-        _, ist = self.ids.compact(min_files=max_files_per_bucket + 1)
-        iexp = self.ids.expire_snapshots(keep_last=keep_snapshots)
-        out.update(
-            ids_buckets_compacted=ist["buckets_compacted"],
-            ids_files_expired=len(iexp),
-        )
+        for prefix, table in (("", self.vectors), ("ids_", self.ids),
+                              ("deleted_", self.deleted)):
+            out.update(compact_and_expire(
+                table, prefix, max_files_per_bucket, keep_snapshots
+            ))
         return out

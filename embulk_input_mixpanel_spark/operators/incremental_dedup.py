@@ -21,11 +21,14 @@ atomic commits, time travel, bucket-pruned reads):
   frequency deltas, summed on read, pruned to the batch's shingle
   universe. The persistent belt against boilerplate shingles.
 - ``deleted`` (id, batch_seq), bucketed by id — the takedown registry
-  (license removal / PII): :meth:`delete` appends ids O(batch); every
+  (license removal / PII) shared with IncrementalANN
+  (operators/maintenance.py): :meth:`delete` appends ids O(batch); every
   read path masks them immediately; :meth:`purge_deleted` (run by
   maintain) physically drops their rows via CoW of only the affected
-  buckets. Rows are kept forever — they double as the no-reingest
-  memory, the store-level analog of the CDC table's op='D' tombstones.
+  buckets, then advances the registry's ``purged_seq`` watermark with a
+  properties-only commit. Rows are kept forever — they double as the
+  no-reingest memory, the store-level analog of the CDC table's op='D'
+  tombstones.
 
 Cost model per batch (the 100 TB story): shingling/hashing is O(batch)
 (the expensive text explosion never re-touches old docs); the index
@@ -80,6 +83,15 @@ from pyspark.sql import types as T
 
 from ..sources.lake import LakeTable, lake_buckets_of
 from .dedup import _derived, _minhash_band_keys, _rebalance, base31, shingles
+from .maintenance import (
+    compact_and_expire,
+    mark_purged,
+    open_registry,
+    pending_takedowns,
+    purge_buckets,
+    register_takedowns,
+    without_takedowns,
+)
 
 __all__ = ["IncrementalDeduper"]
 
@@ -126,16 +138,6 @@ _DFREQ_SCHEMA = T.StructType(
     ]
 )
 
-# takedown registry: ids whose docs are deleted from the store. Rows are
-# kept FOREVER (they double as the no-reingest memory); purged_seq in the
-# table properties tracks how far physical purging has caught up.
-_DELETED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("batch_seq", T.LongType()),
-    ]
-)
-
 
 class IncrementalDeduper:
     """Persistent MinHash-LSH dedup state + per-batch ingest.
@@ -170,10 +172,8 @@ class IncrementalDeduper:
         sig_path = os.path.join(self.path, "sigs")
         buck_path = os.path.join(self.path, "buckets")
         df_path = os.path.join(self.path, "dfreq")
-        del_path = os.path.join(self.path, "deleted")
         self.sigs = LakeTable(spark, sig_path)
         self.buckets = LakeTable(spark, buck_path)
-        self.deleted = LakeTable(spark, del_path)
         self.dfreq = LakeTable(spark, df_path) if max_shingle_docs is not None else None
         if not self.sigs.exists():
             self.sigs = LakeTable.create(
@@ -221,15 +221,10 @@ class IncrementalDeduper:
                 spark, buck_path, _BUCKET_SCHEMA, num_buckets=num_buckets,
                 properties={"batch_seq": 0},
             )
-        if not self.deleted.exists():
-            # same num_buckets as sigs ON PURPOSE: a batch's id-bucket
-            # list prunes BOTH tables, so the takedown mask adds zero
-            # extra driver jobs to the hot ingest path
-            self.deleted = LakeTable.create(
-                spark, del_path, _DELETED_SCHEMA,
-                num_buckets=self.sigs.num_buckets,
-                properties={"batch_seq": 0, "purged_seq": 0},
-            )
+        # shares sigs' num_buckets: one id-bucket list prunes both reads
+        self.deleted = open_registry(
+            spark, os.path.join(self.path, "deleted"), self.sigs
+        )
         if self.dfreq is not None and not self.dfreq.exists():
             self.dfreq = LakeTable.create(
                 spark, df_path, _DFREQ_SCHEMA, num_buckets=num_buckets,
@@ -237,21 +232,12 @@ class IncrementalDeduper:
             )
             if int(self.sigs.properties.get("batch_seq", 0)) > 0:
                 # cap enabled on a pre-existing store (upgrade): stamp the
-                # cap into sigs properties so later reopens validate
-                # against it (a rows-free append is a properties-only
-                # commit). The df backfill itself is recover()'s tolerant
-                # roll-forward — it runs before the next batch touches
-                # dfreq and is crash-safe because the deltas are a pure
-                # function of the stored sigs.
-                self.sigs.commit_append(
-                    spark.createDataFrame([], self.sigs.schema).withColumn(
-                        "bucket", F.lit(0)
-                    ),
-                    properties={
-                        "max_shingle_docs": max_shingle_docs
-                        if max_shingle_docs is not None else "none"
-                    },
-                )
+                # cap into sigs properties (a properties-only commit) so
+                # later reopens validate against it. The df backfill itself
+                # is recover()'s tolerant roll-forward — it runs before the
+                # next batch touches dfreq and is crash-safe because the
+                # deltas are a pure function of the stored sigs.
+                self.sigs.commit_properties({"max_shingle_docs": max_shingle_docs})
 
     # ------------------------------------------------------------ internals
 
@@ -261,6 +247,18 @@ class IncrementalDeduper:
             F.posexplode(keys).alias("band", "bk"),
             F.col("id"),
             F.lit(batch_seq).cast("long").alias("batch_seq"),
+        )
+
+    def _df_deltas(self, sig_df: DataFrame, batch_seq, sign: int = 1) -> DataFrame:
+        """``sign`` x per-shingle document counts of ``sig_df``'s stored
+        (post-cap) shingle sets: one dfreq delta stamped ``batch_seq``."""
+        cnt = F.count("*") if sign > 0 else -F.count("*")
+        return (
+            sig_df.select(F.explode("shs").alias("sh"))
+            .groupBy("sh")
+            .agg(cnt.alias("cnt"))
+            .withColumn("batch_seq", F.lit(batch_seq).cast("long"))
+            .withColumn("bucket", self.dfreq.bucket_expr("sh"))
         )
 
     def recover(self) -> bool:
@@ -315,16 +313,11 @@ class IncrementalDeduper:
                 # boilerplate shingles those docs kept); readers only SUM
                 # cnt per sh, so one combined delta stamped sig_seq is
                 # exactly equivalent to the per-batch deltas it replaces.
-                delta = (
-                    self.sigs.read()
-                    .filter(F.col("batch_seq") > F.lit(df_seq))
-                    .select(F.explode("shs").alias("sh"))
-                    .groupBy("sh")
-                    .agg(F.count("*").alias("cnt"))
-                    .withColumn("batch_seq", F.lit(sig_seq).cast("long"))
-                )
                 self.dfreq.commit_append(
-                    delta.withColumn("bucket", self.dfreq.bucket_expr("sh")),
+                    self._df_deltas(
+                        self.sigs.read().filter(F.col("batch_seq") > F.lit(df_seq)),
+                        sig_seq,
+                    ),
                     properties={"batch_seq": sig_seq},
                     expected_version=self.dfreq.version,
                 )
@@ -349,19 +342,17 @@ class IncrementalDeduper:
         recovery must run before maintenance mutates the store it reads.
         Pending takedowns are then physically purged (see
         :meth:`purge_deleted`) before compaction, so the compacted files
-        no longer carry deleted docs' rows."""
+        no longer carry deleted docs' rows. The takedown registry is
+        compacted too: every add_batch known-id mask opens its files."""
         out: dict[str, int] = {"recovered": int(self.recover())}
         out.update(self.purge_deleted())
-        tables = [("sigs", self.sigs), ("buckets", self.buckets)]
+        tables = [("sigs", self.sigs), ("buckets", self.buckets), ("deleted", self.deleted)]
         if self.dfreq is not None:
             tables.append(("dfreq", self.dfreq))
         for name, table in tables:
-            _, st = table.compact(min_files=max_files_per_bucket + 1)
-            expired = table.expire_snapshots(keep_last=keep_snapshots)
-            out[f"{name}_buckets_compacted"] = st["buckets_compacted"]
-            out[f"{name}_files_in"] = st["files_in"]
-            out[f"{name}_files_out"] = st["files_out"]
-            out[f"{name}_files_expired"] = len(expired)
+            out.update(compact_and_expire(
+                table, f"{name}_", max_files_per_bucket, keep_snapshots
+            ))
         return out
 
     # ------------------------------------------------------------- takedown
@@ -369,8 +360,8 @@ class IncrementalDeduper:
     def delete(self, ids, id_col: str = "doc_id") -> int:
         """Take down documents: logically delete them from the store.
 
-        O(delete batch): one bucket-pruned idempotence anti-join + one
-        atomic append to the ``deleted`` registry — never a rewrite of
+        One append to the ``deleted`` registry
+        (:func:`~.maintenance.register_takedowns`) — never a rewrite of
         corpus state on the takedown path (the physical drop is
         :meth:`purge_deleted`, a maintenance operation). Effective
         immediately on every read path: deleted docs stop appearing in
@@ -384,27 +375,7 @@ class IncrementalDeduper:
         Returns the number of ids newly recorded (already-deleted and
         never-ingested ids are accepted and deduped — deleting ahead of
         delivery blocks the doc from ever entering the store)."""
-        if isinstance(ids, DataFrame):
-            want = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-        else:
-            want = self.spark.createDataFrame(
-                [(int(i),) for i in ids], "id BIGINT"
-            ).distinct()
-        del_v = self.deleted.version
-        seq = int(self.deleted.properties.get("batch_seq", 0)) + 1
-        pruned = lake_buckets_of(want, self.deleted, "id")
-        already = self.deleted.read(buckets=pruned).select("id")
-        fresh = want.join(already, "id", "left_anti").localCheckpoint(eager=True)
-        n = fresh.count()
-        if n == 0:
-            return 0
-        self.deleted.commit_append(
-            fresh.select("id", F.lit(seq).cast("long").alias("batch_seq"))
-            .withColumn("bucket", self.deleted.bucket_expr("id")),
-            properties={"batch_seq": seq},
-            expected_version=del_v,
-        )
-        return n
+        return register_takedowns(self.deleted, ids, id_col)
 
     def purge_deleted(self) -> dict[str, int]:
         """Physically drop deleted docs' rows from ``sigs`` and the band
@@ -425,18 +396,11 @@ class IncrementalDeduper:
         candidates die at the rescore join) and vanish at the next
         bucket-cap-triggering rewrite or store rebuild."""
         self.recover()
-        del_seq = int(self.deleted.properties.get("batch_seq", 0))
-        purged = int(self.deleted.properties.get("purged_seq", 0))
         out = {"purged_ids": 0, "sig_buckets_rewritten": 0,
                "index_buckets_rewritten": 0}
-        if del_seq == purged:
+        targets, del_seq = pending_takedowns(self.deleted)
+        if targets is None:
             return out
-        targets = (
-            self.deleted.read()
-            .filter(F.col("batch_seq") > F.lit(purged))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
         n = targets.count()
         if n:
             # each rewrite is pinned to the version its keep-set was read
@@ -455,27 +419,16 @@ class IncrementalDeduper:
             keys = self._band_index_rows(dsigs.drop("batch_seq"), 0).select("band", "bk")
             idx_buckets = lake_buckets_of(keys, self.buckets, "band", "bk")
             if idx_buckets:
-                keep = self.buckets.read(buckets=idx_buckets).join(
-                    targets, "id", "left_anti"
-                )
-                self.buckets.commit_rewrite(
-                    keep.withColumn(
-                        "bucket", self.buckets.bucket_expr("band", "bk")
-                    ),
-                    touched_buckets=idx_buckets,
-                    expected_version=buck_v,
+                purge_buckets(
+                    self.buckets, idx_buckets, targets,
+                    self.buckets.bucket_expr("band", "bk"), buck_v,
                 )
             # 2) sigs (after this, a crash-rerun finds no dsigs rows, so
             #    step 3 can never double-subtract)
             if sig_buckets:
-                sig_v = self.sigs.version
-                keep = self.sigs.read(buckets=sig_buckets).join(
-                    targets, "id", "left_anti"
-                )
-                self.sigs.commit_rewrite(
-                    keep.withColumn("bucket", self.sigs.bucket_expr("id")),
-                    touched_buckets=sig_buckets,
-                    expected_version=sig_v,
+                purge_buckets(
+                    self.sigs, sig_buckets, targets,
+                    self.sigs.bucket_expr("id"), self.sigs.version,
                 )
             # 3) negative df deltas from the purged docs' post-cap sets
             #    (dsigs was checkpointed BEFORE the sigs rewrite). A crash
@@ -484,18 +437,8 @@ class IncrementalDeduper:
             #    conservative; the reverse order could double-subtract and
             #    resurrect boilerplate, which loses recall.
             if self.dfreq is not None:
-                neg = (
-                    dsigs.select(F.explode("shs").alias("sh"))
-                    .groupBy("sh")
-                    .agg((-F.count("*")).alias("cnt"))
-                    .withColumn(
-                        "batch_seq",
-                        F.lit(int(self.dfreq.properties.get("batch_seq", 0))).cast("long"),
-                    )
-                )
-                self.dfreq.commit_append(
-                    neg.withColumn("bucket", self.dfreq.bucket_expr("sh")),
-                )
+                df_seq = int(self.dfreq.properties.get("batch_seq", 0))
+                self.dfreq.commit_append(self._df_deltas(dsigs, df_seq, sign=-1))
             out.update(
                 purged_ids=n,
                 sig_buckets_rewritten=len(sig_buckets),
@@ -503,12 +446,7 @@ class IncrementalDeduper:
             )
         # advance the watermark LAST (a crash before this line re-runs the
         # purge, which is a no-op over already-purged rows)
-        self.deleted.commit_append(
-            self.spark.createDataFrame([], self.deleted.schema).withColumn(
-                "bucket", F.lit(0)
-            ),
-            properties={"purged_seq": del_seq},
-        )
+        mark_purged(self.deleted, del_seq)
         return out
 
     # ----------------------------------------------------------- redelivery
@@ -547,17 +485,12 @@ class IncrementalDeduper:
         empty = self.spark.createDataFrame([], PAIR_SCHEMA)
         ids = docs.select(F.col(id_col).cast("long").alias("id")).distinct()
         id_lake_buckets = lake_buckets_of(ids, self.sigs, "id")
-        mine = (
-            self.sigs.read(buckets=id_lake_buckets)
-            .join(ids, "id", "left_semi")
-            # takedown mask: a deleted doc's original pairs are not
-            # re-derivable (its content is logically gone)
-            .join(
-                self.deleted.read(buckets=id_lake_buckets).select("id"),
-                "id", "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
+        # takedown mask: a deleted doc's original pairs are not
+        # re-derivable (its content is logically gone)
+        mine = without_takedowns(
+            self.sigs.read(buckets=id_lake_buckets).join(ids, "id", "left_semi"),
+            self.deleted, id_lake_buckets,
+        ).localCheckpoint(eager=True)
         seqs = sorted(
             int(r["batch_seq"]) for r in mine.select("batch_seq").distinct().collect()
         )
@@ -595,15 +528,10 @@ class IncrementalDeduper:
             cand.select(F.col("id_b").alias("id"))
         ).distinct()
         cand_lake_buckets = lake_buckets_of(cids, self.sigs, "id")
-        csigs = (
-            self.sigs.read(buckets=cand_lake_buckets)
-            .join(cids, "id", "left_semi")
-            .join(
-                self.deleted.read(buckets=cand_lake_buckets).select("id"),
-                "id", "left_anti",
-            )
-            .select("id", "shs", "batch_seq")
-        )
+        csigs = without_takedowns(
+            self.sigs.read(buckets=cand_lake_buckets).join(cids, "id", "left_semi"),
+            self.deleted, cand_lake_buckets,
+        ).select("id", "shs", "batch_seq")
         a = csigs.select(
             F.col("id").alias("id_a"), F.col("shs").alias("shs_a"),
             F.col("batch_seq").alias("seq_a"),
@@ -789,15 +717,11 @@ class IncrementalDeduper:
         # checkpoint's size is unknown to the planner, which would
         # otherwise shuffle both sides before AQE switches to a broadcast)
         old_ids = cand.select(oid.alias("id")).filter(F.col("id").isNotNull())
-        old_sigs = (
+        old_sigs = without_takedowns(
             self.sigs.read(buckets=old_lake_buckets)
-            .join(F.broadcast(old_ids), "id", "left_semi")
-            .join(
-                self.deleted.read(buckets=old_lake_buckets).select("id"),
-                "id", "left_anti",
-            )
-            .select("id", "shs")
-        )
+            .join(F.broadcast(old_ids), "id", "left_semi"),
+            self.deleted, old_lake_buckets,
+        ).select("id", "shs")
         allsigs = perdoc.select("id", "shs").unionByName(old_sigs)
         # both sides join the SAME frame, so their broadcasts are one
         # exchange (reused), not two builds of the union
@@ -835,14 +759,8 @@ class IncrementalDeduper:
             # third phase of the append sequence; deltas recomputed from
             # perdoc.shs (the POST-cap sets — identical to what recover()
             # would rebuild from the committed sigs rows)
-            delta = (
-                perdoc.select(F.explode("shs").alias("sh"))
-                .groupBy("sh")
-                .agg(F.count("*").alias("cnt"))
-                .withColumn("batch_seq", F.lit(batch_seq).cast("long"))
-            )
             self.dfreq.commit_append(
-                delta.withColumn("bucket", self.dfreq.bucket_expr("sh")),
+                self._df_deltas(perdoc, batch_seq),
                 properties={"batch_seq": batch_seq},
                 expected_version=df_v,
             )

@@ -27,17 +27,10 @@ Design notes (the 100 TB story):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["latest_wins", "merge_upsert"]
-
-
-def _order_struct(order_cols: list[str], extra: list[Column] | None = None) -> Column:
-    cols: list[Column] = [F.col(c) for c in order_cols]
-    if extra:
-        cols += extra
-    return F.struct(*cols)
 
 
 def latest_wins(

@@ -15,9 +15,7 @@ __all__ = [
     "token_count",
     "BPE_ISH_PATTERN",
     "bpe_ish_token_count",
-    "stopword_ratio",
     "quality_features",
-    "lang_scores",
     "lang_id",
     "rolling_fingerprint",
 ]
@@ -65,11 +63,6 @@ def _hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: F.array_contains(arr, x)))
 
 
-def stopword_ratio(text_col: str | Column) -> Column:
-    t = tokens(text_col)
-    return _hits(t, STOPWORDS).cast("double") / F.size(t)
-
-
 def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document quality signals (all per-row double math).
 
@@ -95,11 +88,6 @@ def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def lang_scores(text_col: str | Column) -> list[Column]:
-    t = tokens(text_col)
-    return [_hits(t, LANG_MARKERS[lang]).alias(f"s_{lang}") for lang in LANG_MARKERS]
-
-
 def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Marker-vote language ID with deterministic >=-tiebreak order.
 
@@ -111,7 +99,6 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
         *[_hits(F.col("_toks"), LANG_MARKERS[lang]).alias(f"s_{lang}") for lang in LANG_MARKERS],
     )
     langs = list(LANG_MARKERS)
-    pred = None
     # lang_i wins if its score >= all later scores (ties -> earlier lang)
     expr = F.lit(langs[-1])
     for lang in reversed(langs[:-1]):
@@ -120,11 +107,10 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
             c = F.col(f"s_{lang}") >= F.col(f"s_{other}")
             cond = c if cond is None else (cond & c)
         expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    pred = expr
     return scored.select(
         id_col,
         *[F.col(f"s_{l}").cast("long").alias(f"s_{l}") for l in langs],
-        pred.alias("pred_lang"),
+        expr.alias("pred_lang"),
     )
 
 

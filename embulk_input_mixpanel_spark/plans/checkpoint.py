@@ -39,7 +39,7 @@ from typing import Any
 
 from ..sources.lake import LakeTable
 
-__all__ = ["get_hwm_map", "get_cursor", "get_last_batch", "checkpoint_properties"]
+__all__ = ["get_hwm_map", "get_cursor", "checkpoint_properties"]
 
 
 def get_hwm_map(table: LakeTable) -> dict[int, int]:
@@ -53,10 +53,6 @@ def _key(base: str, writer_id: str) -> str:
 
 def get_cursor(table: LakeTable, writer_id: str = "") -> int:
     return int(table.properties.get(_key("cursor_seq", writer_id), -1))
-
-
-def get_last_batch(table: LakeTable, writer_id: str = "") -> int:
-    return int(table.properties.get(_key("last_batch", writer_id), -1))
 
 
 def checkpoint_properties(

@@ -489,3 +489,24 @@ def test_streaming_feed_drives_incremental_ann(spark, emb, tmp_table_dir, tmp_pa
     got = _rows(ann.topk(query_ids=[0, 1, 2], k=3, n_probe=2))
     want = _rows(ivf_topk(emb, query_ids=[0, 1, 2], k=3, n_centroids=8, n_probe=2))
     assert got == want and got
+
+
+def test_maintain_compacts_the_takedown_registry(spark, emb, tmp_table_dir):
+    """Each delete() adds a file per registry bucket it touches, and every
+    add_batch known-id mask opens them: maintain() compacts the registry
+    with the other tables, and the takedowns still mask afterwards."""
+    ann = IncrementalANN(spark, tmp_table_dir, n_centroids=8, id_buckets=4)
+    ann.add_batch(emb.filter("vec_id < 100"))
+    for i in range(3):  # 40 ids over 4 buckets: every bucket, every call
+        assert ann.delete(range(i * 40, i * 40 + 40)) == 40
+    assert [len(fl) for fl in ann.deleted.snapshot().files.values()] == [3] * 4
+    st = ann.maintain(max_files_per_bucket=2)
+    assert st["deleted_buckets_compacted"] == 4 and st["deleted_files_out"] == 4
+    assert [len(fl) for fl in ann.deleted.snapshot().files.values()] == [1] * 4
+    assert ann.deleted.read().count() == 120
+    # purged from the store, blocked from re-ingest, masked in probes
+    assert ann.vectors.read().filter("id < 120").count() == 0
+    assert ann.add_batch(emb.filter("vec_id < 150")) == 30
+    out = ann.topk(query_ids=[120, 121], k=200, n_probe=8)
+    assert out.count() > 0 and out.filter("neighbor_id < 120").count() == 0
+    assert ann.delete(range(120)) == 0

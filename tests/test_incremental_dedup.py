@@ -556,3 +556,24 @@ def test_two_batch_parity_portable_tier(spark, docs, tmp_table_dir):
         docs, threshold=0.85, n=3, k=24, n_bands=8,
         max_shingle_docs=None, portable=True))
     assert {**p1, **p2} == want and want
+
+
+def test_maintain_compacts_the_takedown_registry(spark, docs, tmp_table_dir):
+    """Each delete() adds a file per registry bucket it touches, and every
+    add_batch known-id mask opens them: maintain() compacts the registry
+    with the other tables, and the takedowns still mask afterwards."""
+    dd = IncrementalDeduper(spark, tmp_table_dir, num_buckets=4)
+    dd.add_batch(docs.filter("doc_id < 100"))
+    for i in range(3):  # 40 ids over 4 buckets: every bucket, every call
+        assert dd.delete(range(i * 40, i * 40 + 40)) == 40
+    assert [len(fl) for fl in dd.deleted.snapshot().files.values()] == [3] * 4
+    st = dd.maintain(max_files_per_bucket=2)
+    assert st["deleted_buckets_compacted"] == 4 and st["deleted_files_out"] == 4
+    assert [len(fl) for fl in dd.deleted.snapshot().files.values()] == [1] * 4
+    assert dd.deleted.read().count() == 120
+    # purged from the store, blocked from re-ingest, still known to delete()
+    assert dd.sigs.read().filter("id < 120").count() == 0
+    stats = {}
+    dd.add_batch(docs.filter("doc_id < 120"), stats=stats)
+    assert stats["n_new"] == 0
+    assert dd.delete(range(120)) == 0

@@ -261,3 +261,59 @@ def _id_schema():
     from pyspark.sql import types as T
 
     return T.StructType([T.StructField("id", T.LongType())])
+
+
+def _staging_dirs(table) -> set[str]:
+    data = os.path.join(table.path, "data")
+    return {d for d in os.listdir(data) if d.startswith("v")} if os.path.isdir(data) else set()
+
+
+def _count_commit_jobs(spark, table) -> list[tuple[dict, int]]:
+    """Run every commit of ``table`` under :func:`_count_jobs`; the list
+    returned collects (snapshot properties, Spark jobs) per commit."""
+    seen = []
+    for name in ("commit_append", "commit_properties", "commit_rewrite"):
+        real = getattr(table, name)
+
+        def counted(*a, _real=real, **kw):
+            snap, jobs = _count_jobs(spark, lambda: _real(*a, **kw))
+            seen.append((dict(snap.properties), jobs))
+            return snap
+
+        setattr(table, name, counted)
+    return seen
+
+
+def test_purge_watermark_and_cap_stamp_are_properties_only_commits(spark, inputs, workdir):
+    """The purge watermark of both stores and the dedup cap-enable stamp
+    are metadata-only commits: no Spark job, no staged data directory."""
+    docs, _, vecs, _ = inputs
+    dd = IncrementalDeduper(spark, os.path.join(workdir, "dedup"))
+    dd.add_batch(_staged(spark, workdir, "docs", docs[:60], "docs"))
+    ann = IncrementalANN(spark, os.path.join(workdir, "ann"))
+    ann.add_batch(_staged(spark, workdir, "vecs", vecs[:60], "vecs"))
+    for store in (dd, ann):
+        assert store.delete([3, 4, 5]) == 3
+        before = _staging_dirs(store.deleted)
+        commits = _count_commit_jobs(spark, store.deleted)
+        assert store.purge_deleted()["purged_ids"] == 3
+        # the watermark is the purge's last commit, and its only one on
+        # the registry
+        assert len(commits) == 1, commits
+        props, jobs = commits[-1]
+        assert int(props["purged_seq"]) == int(props["batch_seq"]) == 1
+        assert jobs == 0, jobs
+        assert int(store.deleted.properties["purged_seq"]) == 1
+        assert _staging_dirs(store.deleted) == before
+        assert store.purge_deleted()["purged_ids"] == 0
+
+    # enabling the df cap on an uncapped store stamps it into sigs
+    before = _staging_dirs(dd.sigs)
+    capped, jobs = _count_jobs(
+        spark, lambda: IncrementalDeduper(spark, dd.path, max_shingle_docs=50)
+    )
+    assert jobs == 0, jobs
+    assert capped.sigs.properties["max_shingle_docs"] == 50
+    assert _staging_dirs(capped.sigs) == before
+    with pytest.raises(ValueError, match="max_shingle_docs"):
+        IncrementalDeduper(spark, dd.path, max_shingle_docs=60)
