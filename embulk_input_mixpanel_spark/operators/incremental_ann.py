@@ -111,6 +111,57 @@ _ID_SCHEMA = T.StructType(
 )
 
 
+class _Expressions:
+    """The fixed Columns of the ingest and probe paths, built once per
+    store instance (never at import: building a Column needs an active
+    SparkContext). Only per-call values — the batch's ``batch_seq``, the
+    probed ids, ``k`` and ``n_probe`` — are built per call."""
+
+    def __init__(self):
+        self.centroid_vector = F.col("cv").alias("_cv")
+        # _score_against_centroids: the centroids as one array of
+        # (cid, cv, cn) structs, and the per-vector argmax fold over it
+        self.centroid_array = F.collect_list(
+            F.struct(
+                F.col("centroid_id").alias("cid"),
+                F.col("_cv").alias("cv"),
+                _norm("_cv").alias("cn"),
+            )
+        ).alias("_cents")
+        self.vector_norm = _norm("v")
+        self.best_centroid = F.array_max(
+            F.transform(
+                "_cents",
+                lambda c: F.struct(
+                    F.round(_cosine_n("v", c["cv"], F.col("_vn"), c["cn"]), 4).alias("c"),
+                    (-c["cid"]).alias("negid"),
+                    c["cid"].alias("cid"),
+                ),
+            )
+        )
+        self.assignment = [F.col("_w.cid").alias("cluster"), F.col("_w.c").alias("cos_r")]
+        self.cluster_bucket = F.col("cluster").alias("bucket")
+        # topk: query x centroid probe choice, then query x neighbor rescore
+        self.query_norm = _norm("_qv").alias("_qn")
+        self.centroid_norm = _norm("_cv").alias("_cn")
+        self.centroid_cos = F.round(
+            _cosine_n("_qv", "_cv", F.col("_qn"), F.col("_cn")), 4
+        ).alias("ccos")
+        self.probe_rank = F.row_number().over(
+            Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("centroid_id"))
+        )
+        self.probed_cluster = F.col("centroid_id").alias("cluster")
+        self.neighbor = [F.col("id").alias("neighbor_id"), F.col("v").alias("_nv")]
+        self.neighbor_norm = _norm("_nv").alias("_nn")
+        self.not_self = F.col("neighbor_id") != F.col("query_id")
+        self.neighbor_cos = F.round(
+            _cosine_n("_qv", "_nv", F.col("_qn"), F.col("_nn")), 4
+        ).alias("cos_r")
+        self.neighbor_rank = F.row_number().over(
+            Window.partitionBy("query_id").orderBy(F.desc("cos_r"), F.asc("neighbor_id"))
+        ).cast("long")
+
+
 class IncrementalANN:
     """Persistent IVF index + per-batch ingest + bucket-pruned probes."""
 
@@ -128,6 +179,7 @@ class IncrementalANN:
         caller."""
         self.spark = spark
         self.path = os.path.abspath(path)
+        self._x = _Expressions()
         cent_path = os.path.join(self.path, "cent")
         vec_path = os.path.join(self.path, "vectors")
         ids_path = os.path.join(self.path, "ids")
@@ -179,7 +231,7 @@ class IncrementalANN:
     # ------------------------------------------------------------ internals
 
     def _centroids(self) -> DataFrame:
-        return self.cent.read().select("centroid_id", F.col("cv").alias("_cv"))
+        return self.cent.read().select("centroid_id", self._x.centroid_vector)
 
     def _train_from(self, vecs: DataFrame) -> None:
         """Seed centroids = the ``n_centroids`` lowest-id vectors of the
@@ -225,34 +277,13 @@ class IncrementalANN:
         the max-of-struct (cos_r, -centroid_id) — the argmax of
         similarity.ivf_assign with the same cosine expression and the
         same tie-break, but no shuffle and no join back to the vectors."""
-        cents = self._centroids().coalesce(1).agg(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id").alias("cid"),
-                    F.col("_cv").alias("cv"),
-                    _norm("_cv").alias("cn"),
-                )
-            ).alias("_cents")
-        )
-        best = F.array_max(
-            F.transform(
-                "_cents",
-                lambda c: F.struct(
-                    F.round(_cosine_n("v", c["cv"], F.col("_vn"), c["cn"]), 4).alias("c"),
-                    (-c["cid"]).alias("negid"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )
+        x = self._x
+        cents = self._centroids().coalesce(1).agg(x.centroid_array)
         return (
-            vecs.withColumn("_vn", _norm("v"))
+            vecs.withColumn("_vn", x.vector_norm)
             .crossJoin(F.broadcast(cents))
-            .withColumn("_w", best)
-            .select(
-                *vecs.columns,
-                F.col("_w.cid").alias("cluster"),
-                F.col("_w.c").alias("cos_r"),
-            )
+            .withColumn("_w", x.best_centroid)
+            .select(*vecs.columns, *x.assignment)
         )
 
     def _reassign_all(self) -> None:
@@ -282,8 +313,7 @@ class IncrementalANN:
         newassign = self._score_against_centroids(self._live_corpus())
         self.vectors.commit_rewrite(
             newassign.select(
-                "id", "v", "cluster", "cos_r", "batch_seq",
-                F.col("cluster").alias("bucket"),
+                "id", "v", "cluster", "cos_r", "batch_seq", self._x.cluster_bucket
             ),
             touched_buckets=list(range(nc)),
             properties={"cent_epoch": epoch},
@@ -397,7 +427,7 @@ class IncrementalANN:
         out = self._score_against_centroids(vecs).select(
             "id", "v", "cluster", "cos_r",
             F.lit(batch_seq).cast("long").alias("batch_seq"),
-            F.col("cluster").alias("bucket"),
+            self._x.cluster_bucket,
         ).localCheckpoint(eager=True)
         # a count over materialized rows in one task: no exchange, one job
         n = out.coalesce(1).count()
@@ -515,6 +545,7 @@ class IncrementalANN:
         corpus unless its id is)."""
         if (query_ids is None) == (query_vectors is None):
             raise ValueError("pass exactly one of query_ids / query_vectors")
+        x = self._x
         cent = self._centroids()
         if query_vectors is not None:
             q = query_vectors.select(
@@ -534,51 +565,34 @@ class IncrementalANN:
         q = q.join(gone.withColumnRenamed("id", "query_id"), "query_id", "left_anti")
         # |q| rows; referenced by both the probe subtree and the rescore
         # join — checkpoint so the corpus scan behind it runs once
-        q = q.select(
-            "query_id", "_qv", _norm("_qv").alias("_qn")
-        ).localCheckpoint(eager=True)
-        centn = cent.select("centroid_id", "_cv", _norm("_cv").alias("_cn"))
-        qc = F.broadcast(q).join(centn).select(
-            "query_id", "centroid_id",
-            F.round(
-                _cosine_n("_qv", "_cv", F.col("_qn"), F.col("_cn")), 4
-            ).alias("ccos"),
-        )
-        wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("centroid_id"))
+        q = q.select("query_id", "_qv", x.query_norm).localCheckpoint(eager=True)
+        centn = cent.select("centroid_id", "_cv", x.centroid_norm)
+        qc = F.broadcast(q).join(centn).select("query_id", "centroid_id", x.centroid_cos)
         # eager checkpoint: probed feeds BOTH the cluster collect below
         # (file pruning) and the candidate join — without it the
         # query x centroid score + window subtree executes twice per probe
         probed = (
-            qc.withColumn("rn", F.row_number().over(wq))
+            qc.withColumn("rn", x.probe_rank)
             .filter(F.col("rn") <= n_probe)
-            .select("query_id", F.col("centroid_id").alias("cluster"))
+            .select("query_id", x.probed_cluster)
         ).localCheckpoint(eager=True)
         # driver collect of <= |q| * n_probe small ints -> file-level pruning
         clusters = sorted({int(r["cluster"]) for r in probed.collect()})
         snap_files = self.vectors.snapshot().files
         cand_src = self.vectors.read(buckets=clusters).select(
-            "cluster", F.col("id").alias("neighbor_id"), F.col("v").alias("_nv")
+            "cluster", *x.neighbor
         ).select(
-            "cluster", "neighbor_id", "_nv", _norm("_nv").alias("_nn")
+            "cluster", "neighbor_id", "_nv", x.neighbor_norm
         ).join(
             gone.withColumnRenamed("id", "neighbor_id"), "neighbor_id", "left_anti"
         )
         scored = (
             probed.join(cand_src, "cluster")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
+            .filter(x.not_self)
             .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id", "neighbor_id",
-                F.round(
-                    _cosine_n("_qv", "_nv", F.col("_qn"), F.col("_nn")), 4
-                ).alias("cos_r"),
-            )
+            .select("query_id", "neighbor_id", x.neighbor_cos)
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos_r"), F.asc("neighbor_id"))
-        out = (
-            scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= k)
-        )
+        out = scored.withColumn("rnk", x.neighbor_rank).filter(F.col("rnk") <= k)
         if stats is not None:
             stats.update(
                 probed_clusters=clusters,

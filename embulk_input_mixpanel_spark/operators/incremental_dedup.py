@@ -169,6 +169,15 @@ class IncrementalDeduper:
         self.portable = portable
         self.max_bucket_size = max_bucket_size
         self.max_shingle_docs = max_shingle_docs
+        # the batch path's fixed expressions, built once per store: the
+        # per-document aggregates (shingle-hash set and k MinHash minima)
+        # and the band keys, which :meth:`_band_index_rows` explodes
+        self._perdoc_aggs = [
+            F.collect_set(F.xxhash64("shingle")).alias("shs"),
+            *[F.min(h).alias(f"mh_{i}")
+              for i, h in enumerate(_derived(base31("shingle", portable), k))],
+        ]
+        self._band_keys = F.posexplode(_minhash_band_keys(k, n_bands)).alias("band", "bk")
         sig_path = os.path.join(self.path, "sigs")
         buck_path = os.path.join(self.path, "buckets")
         df_path = os.path.join(self.path, "dfreq")
@@ -242,9 +251,8 @@ class IncrementalDeduper:
     # ------------------------------------------------------------ internals
 
     def _band_index_rows(self, sig_df: DataFrame, batch_seq) -> DataFrame:
-        keys = _minhash_band_keys(self.k, self.n_bands)
         return sig_df.select(
-            F.posexplode(keys).alias("band", "bk"),
+            self._band_keys,
             F.col("id"),
             F.lit(batch_seq).cast("long").alias("batch_seq"),
         )
@@ -621,11 +629,7 @@ class IncrementalDeduper:
             sh = sh.join(
                 F.broadcast(hot), F.xxhash64(sh.shingle) == hot.sh, "left_anti"
             )
-        hs = _derived(base31("shingle", self.portable), self.k)
-        perdoc = sh.groupBy("id").agg(
-            F.collect_set(F.xxhash64("shingle")).alias("shs"),
-            *[F.min(h).alias(f"mh_{i}") for i, h in enumerate(hs)],
-        ).localCheckpoint(eager=True)
+        perdoc = sh.groupBy("id").agg(*self._perdoc_aggs).localCheckpoint(eager=True)
         t_sig = time.monotonic()
 
         # band keys of the batch; one aggregate over the checkpointed

@@ -25,6 +25,22 @@ harness, and `spark-submit` jobs share one configuration story:
 - **Small lake writes skip Spark's file writer** — a lake commit whose
   input is at most ``DRIVER_WRITE_BYTES`` is collected as Arrow and
   written by the driver (``sources.lake``); see the constant for why.
+- **A codegen cache that holds the engine's working set** — a small
+  store call does milliseconds of work, so compiling its generated code
+  is a large share of its fixed cost. One store round plus ``maintain``
+  needs about 130 classes; at Spark's default of 100 each call evicted
+  what the next one needed and recompiled 59, 23 and 38 classes per
+  dedup ``add_batch``, ANN ``add_batch`` and ``topk`` (526, 160 and
+  251 ms). At ``CODEGEN_CACHE_ENTRIES`` a steady round compiles 4, 2
+  and 2 (``tools/compile_cost.py``, seed 1, local[3], rounds 2-7).
+- **No Python call-site capture** —
+  ``spark.python.sql.dataFrameDebugging.enabled=false``. With it on (the
+  PySpark 4 default) every ``functions.*`` or ``Column`` call walks the
+  Python stack and makes extra py4j round trips to record its call
+  site: building the dedup store's 24 signature hashes and 8 band keys
+  took a median 330 ms with it on and 115 ms with it off (4 vCPUs). What
+  turning it off loses is the Python file and line in DataFrame error
+  messages; the JVM stack trace and the error itself are unchanged.
 """
 
 from __future__ import annotations
@@ -35,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "get_spark", "default_parallelism", "estimated_bytes", "BYTES_PER_TASK",
-    "DRIVER_WRITE_BYTES",
+    "DRIVER_WRITE_BYTES", "CODEGEN_CACHE_ENTRIES",
 ]
 
 # Input bytes per task of a sized exchange: the measured break-even of a
@@ -60,6 +76,13 @@ BYTES_PER_TASK = 128 * 1024
 # 13 KB of rows) and a sigs compaction stayed on Spark. A 2k-event
 # replay commit (4.4 MB) stays on Spark.
 DRIVER_WRITE_BYTES = 1024 * 1024
+
+# Generated classes Spark keeps compiled (``spark.sql.codegen.cache.
+# maxEntries``, default 100, evicted least-recently-used first): the
+# smallest power of two at least twice the engine's working set. With an
+# unbounded cache one ``perfbench`` run compiles 198 distinct classes on
+# ``store_trickle`` and 155 on ``replay_tail`` (seed 1, local[3]).
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def estimated_bytes(df: DataFrame) -> int:
@@ -105,6 +128,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

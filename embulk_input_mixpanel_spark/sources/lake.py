@@ -182,6 +182,10 @@ class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = os.path.abspath(path)
+        # Columns a store call would otherwise rebuild on every call (see
+        # :meth:`bucket_expr` and :meth:`_stored_columns`)
+        self._bucket_exprs: dict[tuple, Column] = {}
+        self._stored_cols: dict[bool, tuple[str, list[Column]]] = {}
 
     # ---------------------------------------------------------------- setup
 
@@ -340,13 +344,11 @@ class LakeTable:
             # against it folds away, and its size estimate allows a
             # broadcast (a createDataFrame([]) relation has unknown size,
             # which forces a shuffle join on every side it touches)
-            df = self.spark.range(0).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-            )
+            df = self.spark.range(0).select(*self._stored_columns(snap.schema_json, empty=True))
         else:
             paths = [os.path.join(self.path, f) for f in files]
             df = self.spark.read.schema(schema).parquet(*paths)
-        if not include_tombstones and "op" in df.columns:
+        if not include_tombstones and "op" in schema.names:
             df = df.filter((F.col("op").isNull()) | (F.col("op") != "D"))
         return df
 
@@ -362,7 +364,28 @@ class LakeTable:
         )
 
     def bucket_expr(self, *key_cols: str) -> Column:
-        return bucket_of(self.num_buckets, *key_cols)
+        """:func:`bucket_of` at the table's current ``num_buckets``, built
+        once per key and bucket count."""
+        key = (self.num_buckets, *key_cols)
+        expr = self._bucket_exprs.get(key)
+        if expr is None:
+            expr = self._bucket_exprs[key] = bucket_of(*key)
+        return expr
+
+    def _stored_columns(self, schema_json: str, empty: bool = False) -> list[Column]:
+        """Every column of ``schema_json`` cast to its stored type and
+        named as stored: the column of the same name of the frame it is
+        selected from, or (``empty``) a typed null. Built once per schema
+        and kind, so a commit or an empty read of an unchanged schema
+        builds no Column."""
+        cached = self._stored_cols.get(empty)
+        if cached is None or cached[0] != schema_json:
+            fields = T.StructType.fromJson(json.loads(schema_json)).fields
+            cached = self._stored_cols[empty] = (schema_json, [
+                (F.lit(None) if empty else F.col(f.name)).cast(f.dataType).alias(f.name)
+                for f in fields
+            ])
+        return cached[1]
 
     def lookup(self, key: dict[str, Any], version: int | None = None) -> DataFrame:
         """Point lookup: open ONLY the key's bucket, then filter to the key.
@@ -490,12 +513,11 @@ class LakeTable:
             raise ConcurrentCommitError(
                 f"table at v{pre.version}, batch planned against v{expected_version}"
             )
-        out_schema = schema or pre.schema
+        out_json = json.dumps(schema.jsonValue()) if schema else pre.schema_json
         # cast to the declared schema: callers may carry wider inferred
         # types (e.g. python-int long vs table int) and parquet readers
         # reject type drift between files
-        out_cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
-        out = df.select("bucket", *out_cols)
+        out = df.select("bucket", *self._stored_columns(out_json))
         staged = self._stage(out, pre.version + 1, estimated_bytes(out))
 
         # critical section: the optimistic check must be atomic with the
@@ -519,7 +541,7 @@ class LakeTable:
 
             snap = Snapshot(
                 version=prev.version + 1,
-                schema_json=json.dumps(out_schema.jsonValue()),
+                schema_json=out_json,
                 num_buckets=num_buckets if num_buckets is not None else prev.num_buckets,
                 files=files,
                 properties={**prev.properties, **(properties or {})},
@@ -569,8 +591,7 @@ class LakeTable:
             raise ConcurrentCommitError(
                 f"table at v{pre.version}, batch planned against v{expected_version}"
             )
-        out_cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in pre.schema.fields]
-        out = df.select("bucket", *out_cols)
+        out = df.select("bucket", *self._stored_columns(pre.schema_json))
         staged = self._stage(
             out, pre.version + 1, estimated_bytes(out), partitions=pre.num_buckets
         )

@@ -6,8 +6,9 @@ under its own Spark job group, and counts the jobs it scheduled with
 action is a job of its own, so the counts are a direct measure of the
 fixed cost a small batch pays. The pinned results are what the same
 inputs produced before the job budgets were cut (pair sets, ingest count
-and the new vectors' cluster assignments). The stores' maintenance
-compaction is budgeted the same way.
+and the new vectors' cluster assignments, plus one ``topk`` probe). The
+stores' maintenance compaction is budgeted the same way, and so are the
+classes a steady store round compiles.
 """
 
 from __future__ import annotations
@@ -50,6 +51,15 @@ EXPECTED_PAIRS = {
 }
 # sha256 of the sorted (id, cluster, cos_r) rows the ANN batch stored
 EXPECTED_ANN_DIGEST = "8591d3471a227a1c79d6dffc2e87a32dfa6859e5ed3265aedc76846ef36563a4"
+# sha256 of the sorted (query_id, neighbor_id, cos_r, rnk) rows of a k=10,
+# n_probe=2 probe for TOPK_QUERIES after the ANN batch
+TOPK_QUERIES = [3, 141, 388, NEW_ID + 7]
+EXPECTED_TOPK_DIGEST = "64e74cffb15cff181bb4278476f0ec3c8e2ba4ec129d8ae0d27c980a1e44dd98"
+
+# classes a steady store round (dedup add_batch, ANN add_batch, topk)
+# compiles: each batch's long literals are inlined into generated Java
+# (dedup batch_seq: 4 classes, ANN batch_seq: 2, topk's isin ids: 2)
+STEADY_ROUND_COMPILE_BUDGET = 8
 
 
 def _corpus(seed: int = 5):
@@ -87,6 +97,17 @@ def _staged(spark, root: str, name: str, rows: list[tuple], kind: str):
     path = os.path.join(root, f"{name}.parquet")
     pq.write_table(table, path)
     return spark.read.parquet(path)
+
+
+def _digest(rows) -> str:
+    return hashlib.sha256(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest()
+
+
+def _compiles(spark) -> int:
+    """Classes Janino compiled in this JVM so far (codegen cache hits are
+    not counted)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _count_jobs(spark, fn):
@@ -141,18 +162,19 @@ def test_ann_add_batch_job_budget_and_stats_add_no_work(spark, inputs, workdir):
         ann = IncrementalANN(spark, os.path.join(workdir, label))
         ann.add_batch(base)
         n, jobs = _count_jobs(spark, lambda: ann.add_batch(new, stats=stats))
-        rows = sorted(
-            tuple(r) for r in ann.vectors.read()
-            .filter(f"id >= {NEW_ID}").select("id", "cluster", "cos_r").collect()
+        stored = _digest(
+            ann.vectors.read().filter(f"id >= {NEW_ID}").select("id", "cluster", "cos_r").collect()
         )
-        runs[label] = (n, jobs, hashlib.sha256(repr(rows).encode()).hexdigest())
-    (n_stats, jobs_stats, digest), (n_plain, jobs_plain, digest_plain) = (
+        probe = _digest(ann.topk(query_ids=TOPK_QUERIES, k=10, n_probe=2).collect())
+        runs[label] = (n, jobs, stored, probe)
+    (n_stats, jobs_stats, digest, probe), (n_plain, jobs_plain, digest_plain, probe_plain) = (
         runs["stats"], runs["plain"]
     )
     assert jobs_stats <= ANN_JOB_BUDGET, jobs_stats
     assert jobs_stats == jobs_plain, (jobs_stats, jobs_plain)
     assert n_stats == n_plain == N_BATCH
     assert digest == digest_plain == EXPECTED_ANN_DIGEST
+    assert probe == probe_plain == EXPECTED_TOPK_DIGEST
 
 
 def test_rebalance_runs_no_job_on_a_shuffled_frame(spark, workdir):
@@ -317,3 +339,54 @@ def test_purge_watermark_and_cap_stamp_are_properties_only_commits(spark, inputs
     assert _staging_dirs(capped.sigs) == before
     with pytest.raises(ValueError, match="max_shingle_docs"):
         IncrementalDeduper(spark, dd.path, max_shingle_docs=60)
+
+
+def test_steady_store_round_reuses_generated_code(spark, inputs, workdir):
+    """A steady store round compiles only what its per-batch literals
+    change: Spark's codegen cache holds the classes of the previous
+    rounds (``session.CODEGEN_CACHE_ENTRIES``). At Spark's default of 100
+    entries a round evicted what the next one needed and compiled about
+    120 classes."""
+    docs, _, vecs, _ = inputs
+    dd = IncrementalDeduper(spark, os.path.join(workdir, "dedup"))
+    dd.add_batch(_staged(spark, workdir, "docs", docs, "docs"))
+    ann = IncrementalANN(spark, os.path.join(workdir, "ann"))
+    ann.add_batch(_staged(spark, workdir, "vecs", vecs, "vecs"))
+    rng = random.Random(11)
+    rounds = []
+    for r in range(3):
+        first = NEW_ID + 1000 * (r + 1)
+        src = rng.sample(range(N_BASE), N_BATCH)
+        new_docs = [(first + j, docs[s][1]) for j, s in enumerate(src)]
+        new_vecs = [(first + j, [x + rng.gauss(0, 0.05) for x in vecs[s][1]])
+                    for j, s in enumerate(src)]
+        rounds.append((
+            {(s, first + j) for j, s in enumerate(src)},
+            _staged(spark, workdir, f"docs{r}", new_docs, "docs"),
+            _staged(spark, workdir, f"vecs{r}", new_vecs, "vecs"),
+            rng.sample(range(N_BASE), 3),
+        ))
+    compiled = []
+    for copies, new_docs, new_vecs, queries in rounds:
+        before = _compiles(spark)
+        pairs = {(p["id_a"], p["id_b"]) for p in dd.add_batch(new_docs).collect()}
+        n = ann.add_batch(new_vecs)
+        probe = ann.topk(query_ids=queries, k=10, n_probe=2).collect()
+        compiled.append(_compiles(spark) - before)
+        assert copies <= pairs
+        assert n == N_BATCH
+        assert len(probe) == 3 * 10
+    assert compiled[2] <= STEADY_ROUND_COMPILE_BUDGET, compiled
+
+
+def test_session_turns_python_call_site_capture_off(spark):
+    """With capture on (PySpark's default) every ``functions`` or
+    ``Column`` call walks the Python stack and makes extra py4j round
+    trips to record its call site."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert is_debugging_enabled() is False
+
+    from embulk_input_mixpanel_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == CODEGEN_CACHE_ENTRIES
