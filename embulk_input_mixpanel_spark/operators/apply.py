@@ -28,31 +28,40 @@ Pipeline (each stage cites its reference analog):
    and rewritten (copy-on-write); commit is one atomic snapshot carrying
    data + HWM + cursor (exactly-once; mixpanel.rb:34-46 made atomic).
 
-Per batch three ACTIONS run: (1) a column-pruned
-HWM/metrics pre-aggregation over (source_partition, event_seq), (2) a
-combined discovery pass (touched buckets + new prop keys) over a NARROW
-latest-wins twin — key + order + props only, no content (the order
-prefix is unique per key, so the narrow winner is the full winner minus
-payload; separate actions do not share shuffle files, so narrowing this
-job's exchange is a straight bytes win), (3) the merge write, whose
-union is repartitioned by storage bucket ONCE so the latest-wins
-aggregation and the write layout share a single exchange. The winners
-DataFrame is deliberately NOT persisted: a columnar cache of map-typed
-rows costs more (build + GC) than the narrow recompute. Under AQE each
-exchange of an action is a Spark job of its own, so the three actions
-schedule 8 jobs per batch (``tests/test_replay_jobs.py``; 2k-event
-batches into a 16-bucket table).
+Per batch two ACTIONS run: (1) one ``unionByName(...).collect()`` of
+two aggregates over the bounded events — a column-pruned HWM/metrics
+aggregate over (source_partition, event_seq), and a discovery aggregate
+(touched buckets + new prop keys) over a NARROW latest-wins twin — key +
+order + props only, no content (the order prefix is unique per key, so
+the narrow winner is the full winner minus payload; separate actions do
+not share shuffle files, so narrowing this job's exchange is a straight
+bytes win) — and (2) the merge write, whose union is repartitioned by
+storage bucket ONCE so the latest-wins aggregation and the write layout
+share a single exchange. Both aggregates need only ``keep``, which the
+HWM map read before them fixes, so one action serves them; an empty
+batch returns after it. The winners DataFrame is deliberately NOT
+persisted: a columnar cache of map-typed rows costs more (build + GC)
+than the narrow recompute. Under AQE each exchange of an action is a
+Spark job of its own, so the two actions schedule 7 jobs per batch
+(``tests/test_replay_jobs.py``; 2k-event batches into a 16-bucket table,
+whose commit the driver writes: :meth:`LakeTable.commit_rewrite`).
 
 Every count in :class:`ApplyResult` comes from those actions or from
 files, so batch replays and foreachBatch epochs report the same numbers:
 
-- ``rows_in``, ``rows_skipped_hwm`` and the HWM advance: action (1).
-- ``keys_upserted``: action (2). Its prop keys are exploded with
-  ``posexplode_outer``; a narrow winner yields exactly one row whose
-  position is 0 or null (no props), and those rows are counted.
+- ``rows_in``, ``rows_skipped_hwm`` and the HWM advance: the metrics
+  rows of action (1).
+- ``keys_upserted``: the discovery row of action (1). Its prop keys are
+  exploded with ``posexplode_outer``; a narrow winner yields exactly one
+  row whose position is 0 or null (no props), and those rows are
+  counted.
 - ``rows_in_touched_after``: the parquet footers of the files the commit
   wrote for the touched buckets (:meth:`LakeTable.footer_rows`), read by
   the driver; tombstones included, no Spark job.
+
+``extra["timings"]`` has two phases: ``discovery`` (the checkpoint reads
+and action (1), metrics included) and ``merge_write`` (action (2) and the
+commit).
 """
 
 from __future__ import annotations
@@ -171,8 +180,10 @@ def apply_batch(
         (F.col("event_seq") > F.lit(batch.lo)) & (F.col("event_seq") <= F.lit(batch.hi))
     )
 
-    # --- metrics + HWM pre-aggregation (column-pruned: 2 narrow columns) ---
     keep = _hwm_filter(hwm_before) if hwm_skip else F.lit(True)
+    survivors = bounded.filter(keep)
+
+    # --- metrics + HWM pre-aggregation (column-pruned: 2 narrow columns) ---
     stats = (
         bounded.select("source_partition", "event_seq")
         .groupBy("source_partition")
@@ -181,9 +192,42 @@ def apply_batch(
             F.sum(F.when(~keep, 1).otherwise(0)).alias("n_skipped"),
             F.max("event_seq").alias("max_seq"),
         )
-        .collect()
     )
-    timings["metrics"] = round(time.time() - t0, 3)
+
+    # --- discovery: touched buckets + new prop keys ---
+    # Runs its own NARROW latest-wins (key + order + props only): the
+    # order prefix (commit_seq, event_seq, event_id) is unique per key,
+    # so the narrow winner row is the full winner row minus payload —
+    # identical buckets and prop keys. Shuffle reuse does NOT span the
+    # discovery and merge actions (separate query executions build
+    # separate exchanges), so pre-r6 this job shuffled the full row
+    # WIDTH — content included — twice per batch; projecting content out
+    # here halves the discovery exchange (guide §2.3 project before the
+    # exchange).
+    bucket = bucket_of(table.num_buckets, *KEY_COLS)
+    narrow = survivors.select(*KEY_COLS, *ORDER_COLS, "event_id", "props")
+    w_narrow = (
+        latest_wins(narrow, KEY_COLS, ORDER_COLS, tiebreak_col="event_id")
+        .withColumn("_pm", F.from_json("props", T.MapType(T.StringType(), T.StringType())))
+        .withColumn("bucket", bucket)
+    )
+    # one row per (winner, prop key), and exactly one per winner at
+    # position 0 (or null: no props) — so the winner count rides along
+    disc = (
+        w_narrow.select("bucket", F.posexplode_outer(F.map_keys("_pm")).alias("pos", "k"))
+        .agg(
+            F.collect_set("bucket").alias("buckets"),
+            F.collect_set("k").alias("keys"),
+            F.count(F.when(F.coalesce(F.col("pos"), F.lit(0)) == 0, 1)).alias("n_winners"),
+        )
+    )
+    # ONE action for both aggregates: the discovery row is the one whose
+    # ``buckets`` is set (a global collect_set is never null), every
+    # other row is one source partition's metrics
+    rows = stats.unionByName(disc, allowMissingColumns=True).collect()
+    timings["discovery"] = round(time.time() - t0, 3)
+    (disc,) = [r for r in rows if r["buckets"] is not None]
+    stats = [r for r in rows if r["buckets"] is None]
     rows_in = sum(r["n"] for r in stats)
     rows_skipped = sum(r["n_skipped"] for r in stats)
     hwm_after = dict(hwm_before)
@@ -202,45 +246,13 @@ def apply_batch(
             0, 0, 0, [], hwm_before, hwm_after, time.time() - t0,
         )
 
-    survivors = bounded.filter(keep)
-
     # --- latest-wins reduction (one shuffle; partial agg kills skew) ---
-    bucket = bucket_of(table.num_buckets, *KEY_COLS)
     winners = (
         latest_wins(survivors, KEY_COLS, ORDER_COLS, tiebreak_col="event_id")
         .withColumn("_pm", F.from_json("props", T.MapType(T.StringType(), T.StringType())))
         .withColumn("bucket", bucket)
     )
-
-    # --- one combined discovery pass: touched buckets + new prop keys ---
-    # Runs its own NARROW latest-wins (key + order + props only): the
-    # order prefix (commit_seq, event_seq, event_id) is unique per key,
-    # so the narrow winner row is the full winner row minus payload —
-    # identical buckets and prop keys. Shuffle reuse does NOT span the
-    # discovery and merge actions (separate query executions build
-    # separate exchanges), so pre-r6 this job shuffled the full row
-    # WIDTH — content included — twice per batch; projecting content out
-    # here halves the discovery exchange (guide §2.3 project before the
-    # exchange).
     promoted = list(promoted_keys) if promoted_keys is not None else _current_promoted(table)
-    narrow = survivors.select(*KEY_COLS, *ORDER_COLS, "event_id", "props")
-    w_narrow = (
-        latest_wins(narrow, KEY_COLS, ORDER_COLS, tiebreak_col="event_id")
-        .withColumn("_pm", F.from_json("props", T.MapType(T.StringType(), T.StringType())))
-        .withColumn("bucket", bucket)
-    )
-    # one row per (winner, prop key), and exactly one per winner at
-    # position 0 (or null: no props) — so the winner count rides along
-    disc = (
-        w_narrow.select("bucket", F.posexplode_outer(F.map_keys("_pm")).alias("pos", "k"))
-        .agg(
-            F.collect_set("bucket").alias("buckets"),
-            F.collect_set("k").alias("keys"),
-            F.count(F.when(F.coalesce(F.col("pos"), F.lit(0)) == 0, 1)).alias("n_winners"),
-        )
-        .first()
-    )
-    timings["discovery"] = round(time.time() - t0 - sum(timings.values()), 3)
     touched = sorted(disc["buckets"])
     reserved = set(reserved_keys or [])
     new_keys: list[str] = []

@@ -22,9 +22,11 @@ harness, and `spark-submit` jobs share one configuration story:
   ``parallelPartitionDiscovery.threshold`` explicit paths (default 32)
   first runs a Spark job of one task per path just to stat them. The
   threshold is raised to 1024 so the driver stats them itself.
-- **Small lake writes skip Spark's file writer** — a lake commit whose
-  input is at most ``DRIVER_WRITE_BYTES`` is collected as Arrow and
-  written by the driver (``sources.lake``); see the constant for why.
+- **Lake writes up to ``DRIVER_WRITE_BYTES`` skip Spark's file writer**
+  — a lake commit whose input :func:`size_of` sizes at most the cutoff is
+  collected as Arrow and written by the driver (``sources.lake``): every
+  25-row store write and every 2k-event replay commit. See the constant
+  for why and for the measured crossover.
 - **A codegen cache that holds the engine's working set** — a small
   store call does milliseconds of work, so compiling its generated code
   is a large share of its fixed cost. One store round plus ``maintain``
@@ -50,7 +52,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
-    "get_spark", "default_parallelism", "estimated_bytes", "BYTES_PER_TASK",
+    "get_spark", "default_parallelism", "estimated_bytes", "size_of", "BYTES_PER_TASK",
     "DRIVER_WRITE_BYTES", "CODEGEN_CACHE_ENTRIES",
 ]
 
@@ -64,18 +66,30 @@ __all__ = [
 BYTES_PER_TASK = 128 * 1024
 
 # Largest lake write the driver stages itself (``df.toArrow()`` then one
-# pyarrow file per bucket) instead of Spark's partitioned file writer.
-# Without Hadoop's native library, Spark's local file system forks a
-# ``chmod`` for every file, checksum file and directory it creates:
-# about 8 forks per written file. ``tools/write_cost.py --buckets 32
-# --rows 25`` (4 vCPUs, local[3], Hadoop native library not loaded):
-#   spark   0.865 s  151 forks  18 files  2 jobs
-#   driver  0.061 s    1 fork   18 files  1 job
-# At 1 MiB every store write of a 25-row batch takes the driver path; at
-# 256 KiB an ANN vectors append (optimizer estimate 405 KB for about
-# 13 KB of rows) and a sigs compaction stayed on Spark. A 2k-event
-# replay commit (4.4 MB) stays on Spark.
-DRIVER_WRITE_BYTES = 1024 * 1024
+# pyarrow file per bucket) instead of Spark's partitioned file writer,
+# compared with :func:`size_of`. Without Hadoop's native library, Spark's
+# local file system forks a ``chmod`` for every file, checksum file and
+# directory it creates: about 8 forks per written file, a fixed cost
+# that only large writes amortize. ``tools/write_cost.py --shape replay
+# --repeats 3`` (4 vCPUs, local[3], Hadoop native library not loaded;
+# CDC rows of ~400 Arrow bytes; median seconds, fewest forks):
+#   buckets  rows   Arrow    spark             driver
+#   16        23k    9 MB    1.09 s  137 forks  0.31 s   9 forks
+#   16       100k   40 MB    1.74 s  141        0.78 s   9
+#   16       250k  101 MB    2.56 s  137        1.67 s  14
+#   16       500k  202 MB    3.36 s  133        3.31 s  18
+#   32        23k    9 MB    1.61 s  249        0.34 s  13
+#   32       100k   40 MB    1.93 s  247        0.72 s  14
+#   32       250k  101 MB    2.59 s  249        1.55 s  13
+#   32       500k  202 MB    4.58 s  250        2.94 s  13
+# and for store rows, ``--buckets 32 --rows 25``: spark 0.865 s and 151
+# forks, driver 0.061 s and 1 fork. The driver wins up to about 200 MB
+# of Arrow at 16 buckets. The cutoff sits well below that, to bound the
+# driver memory a collect takes, and above the ~15 MB a 2k-event replay
+# commit (23k live rows, 9 MB of Arrow) is estimated at, so replay
+# commits and every store write take the driver path. A 500k-event
+# ``bench.py`` batch (sf0.1) stays on Spark.
+DRIVER_WRITE_BYTES = 64 * 1024 * 1024
 
 # Generated classes Spark keeps compiled (``spark.sql.codegen.cache.
 # maxEntries``, default 100, evicted least-recently-used first): the
@@ -88,6 +102,35 @@ CODEGEN_CACHE_ENTRIES = 1024
 def estimated_bytes(df: DataFrame) -> int:
     """The optimizer's size estimate of ``df``; plans it, runs no job."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def size_of(df: DataFrame) -> int:
+    """The size a lake write picks its writer by: the optimizer's estimate
+    of ``df`` or, when its optimized plan reads checkpointed RDDs
+    (``LogicalRDD`` leaves), the larger of that and the bytes their
+    blocks hold. A checkpointed frame keeps the statistics of the plan it
+    was checkpointed from, not of its rows: 25 rows of 64 random doubles
+    are estimated at 300 B and stored in 15 KB, 2000 such rows at 24 KB
+    and 1.2 MB. The stored bytes come from
+    ``SparkContext.getRDDStorageInfo``; no job runs. The plan is the
+    one ``df`` keeps, so a later action on ``df`` does not optimize it
+    again."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    nbytes = int(plan.stats().sizeInBytes())
+    leaves = plan.collectLeaves()
+    rdds = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            rdds.add(leaf.rdd().id())
+    if rdds:
+        stored = sum(
+            info.memSize() + info.diskSize()
+            for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+            if info.id() in rdds
+        )
+        nbytes = max(nbytes, stored)
+    return nbytes
 
 
 def default_parallelism() -> int:

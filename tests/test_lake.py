@@ -547,22 +547,86 @@ def test_driver_write_crash_before_pointer_swap_is_invisible(spark, tmp_table_di
     assert t.read().count() == 2 * len(WIDE_ROWS)
 
 
-def test_write_above_driver_cutoff_takes_spark_writer(spark, tmp_table_dir):
+def test_write_above_driver_cutoff_takes_spark_writer(spark, tmp_table_dir, monkeypatch):
     """An input the optimizer sizes above ``DRIVER_WRITE_BYTES`` is
     staged by Spark's writer (one file per bucket), not collected."""
-    from embulk_input_mixpanel_spark.session import DRIVER_WRITE_BYTES, estimated_bytes
+    from embulk_input_mixpanel_spark.session import estimated_bytes
+    from embulk_input_mixpanel_spark.sources import lake
 
     t = LakeTable.create(spark, tmp_table_dir, SCHEMA, num_buckets=4)
-    big = spark.range(150_000).select(
+    big = spark.range(2_000).select(
         F.concat(F.lit("r"), F.col("id").cast("string")).alias("repo"),
         F.lit("p").alias("path"),
         F.col("id").alias("v"),
     )
     big = _with_bucket(big, 4)
-    assert estimated_bytes(big) > DRIVER_WRITE_BYTES
+    monkeypatch.setattr(lake, "DRIVER_WRITE_BYTES", estimated_bytes(big) // 2)
     t.commit_append(big)
     assert _writers(t) == {str(b): {"parquet-mr"} for b in range(4)}
-    assert t.read().count() == 150_000
+    assert t.read().count() == 2_000
+
+
+def test_checkpointed_write_is_sized_by_its_stored_blocks(spark, tmp_table_dir, monkeypatch):
+    """A checkpointed frame keeps the size estimate of the plan it was
+    checkpointed from: 500 rows of 64 doubles are estimated far below
+    their bytes. Sized by its stored blocks, a frame whose rows exceed
+    the cutoff while its estimate is below it takes Spark's writer
+    instead of being collected to the driver."""
+    from embulk_input_mixpanel_spark.session import estimated_bytes, size_of
+    from embulk_input_mixpanel_spark.sources import lake
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("v", T.ArrayType(T.DoubleType())),
+    ])
+    t = LakeTable.create(spark, tmp_table_dir, schema, num_buckets=4)
+    df = (
+        spark.range(500)
+        .select(bucket_of(4, "id").alias("bucket"), "id",
+                F.array(*[F.rand(i) for i in range(64)]).alias("v"))
+        .localCheckpoint(eager=True)
+    )
+    cutoff = 64 * 1024  # 500 x 64 doubles is 256 KB
+    monkeypatch.setattr(lake, "DRIVER_WRITE_BYTES", cutoff)
+    assert estimated_bytes(df) < cutoff < size_of(df)
+    t.commit_append(df)
+    assert _writers(t) == {str(b): {"parquet-mr"} for b in range(4)}
+    assert t.read().count() == 500
+
+
+def test_driver_write_dictionary_encodes_only_repetitive_columns(spark, tmp_table_dir):
+    """A driver-written file dictionary-encodes a flat column at most half
+    of whose values are distinct (a three-value string column), and keeps
+    a unique string column, a unique long column and an array column
+    plain."""
+    import pyarrow.parquet as pq
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("content", T.StringType()),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+    ])
+    t = LakeTable.create(spark, tmp_table_dir, schema, num_buckets=1)
+    df = spark.range(1_000).select(
+        F.lit(0).alias("bucket"),
+        "id",
+        F.element_at(F.array(F.lit("py"), F.lit("go"), F.lit("rs")),
+                     (F.col("id") % 3 + 1).cast("int")).alias("lang"),
+        F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("content"),
+        F.array(F.lit("a")).alias("tags"),
+    )
+    t.commit_append(df)
+    (f,) = t.snapshot().all_files()
+    meta = pq.ParquetFile(os.path.join(t.path, f)).metadata
+    assert meta.created_by.startswith("parquet-cpp-arrow")
+    rg = meta.row_group(0)
+    dictionary = {
+        rg.column(i).path_in_schema.split(".")[0]: rg.column(i).has_dictionary_page
+        for i in range(rg.num_columns)
+    }
+    assert dictionary == {"id": False, "lang": True, "content": False, "tags": False}
+    assert t.read().count() == 1_000
 
 
 def test_lookup_bucket_matches_a_computed_bucket_over_random_keys(spark):

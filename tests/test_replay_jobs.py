@@ -1,15 +1,19 @@
 """Spark job budget of one replay batch.
 
 A batch shaped like a ``perfbench`` ``replay_tail`` batch — 2k events
-into a backfilled 16-bucket table, large enough that its commit goes
-through Spark's file writer — runs under its own job group, and the jobs
-it scheduled are counted with ``statusTracker().getJobIdsForGroup``, as
-``tests/test_store_jobs.py`` does for the stores. The batch's counts
-(``keys_upserted``, ``rows_in_touched_after``) come from its own actions
-and the written files' footers, so they add no job.
+into a backfilled 16-bucket table, whose commit the driver writes —
+runs under its own job group, and the jobs it scheduled are counted with
+``statusTracker().getJobIdsForGroup``, as ``tests/test_store_jobs.py``
+does for the stores. The batch's counts (``keys_upserted``,
+``rows_in_touched_after``) come from its own actions and the written
+files' footers, so they add no job.
 """
 
 from __future__ import annotations
+
+import os
+
+import pyarrow.parquet as pq
 
 from embulk_input_mixpanel_spark.runner import open_or_create, replay
 from embulk_input_mixpanel_spark.session import DRIVER_WRITE_BYTES
@@ -20,9 +24,9 @@ from .test_store_jobs import _count_jobs
 
 BASE = 6_000
 BATCH = 2_000
-# measured 8: the metrics aggregate, the discovery aggregate and the
-# merge write, each exchange a job of its own under AQE
-REPLAY_JOB_BUDGET = 8
+# measured 7: one action for the metrics and discovery aggregates, and
+# the merge write, each exchange a job of its own under AQE
+REPLAY_JOB_BUDGET = 7
 
 
 def test_replay_batch_job_budget(spark, tmp_path, monkeypatch):
@@ -46,8 +50,14 @@ def test_replay_batch_job_budget(spark, tmp_path, monkeypatch):
         spark, lambda: replay(table, stream, upper_bound=BASE + BATCH, slice_size=BATCH)
     )
     (b,) = rep.batches
-    assert staged and staged[0] > DRIVER_WRITE_BYTES  # Spark's writer, as on replay_tail
+    assert len(staged) == 1 and staged[0] <= DRIVER_WRITE_BYTES  # the driver path
     assert b.touched_buckets == 16
+    files = table.snapshot().files
+    assert {k: len(fl) for k, fl in files.items()} == {str(k): 1 for k in range(16)}
+    assert {
+        pq.ParquetFile(os.path.join(table.path, f)).metadata.created_by.split()[0]
+        for fl in files.values() for f in fl
+    } == {"parquet-cpp-arrow"}
     assert jobs <= REPLAY_JOB_BUDGET, jobs
     assert b.keys_upserted > 0
     assert b.rows_in_touched_after == table.read(include_tombstones=True).count()

@@ -1,14 +1,23 @@
-"""Cost of one small bucketed lake write, through Spark's writer and the driver.
+"""Cost of one bucketed lake write, through Spark's writer and the driver.
 
-Stages a B-bucket x R-row frame (an id and a 64-double vector per row)
-through ``LakeTable._stage`` twice per repeat: once on Spark's
-``partitionBy("bucket")`` writer behind ``repartition(B, "bucket")`` (the
-``commit_append`` layout) and once on the driver path
-(``toArrow()`` + one pyarrow file per bucket). Per path it prints the
-median wall seconds, the fewest processes forked during one write, the
-files written and the Spark jobs run; the header line gives the input's
-optimizer size estimate and whether Hadoop's native library is loaded
-(without it the local file system forks a ``chmod`` per file it creates).
+Stages a B-bucket x R-row frame through ``LakeTable._stage`` twice per
+repeat: once on Spark's ``partitionBy("bucket")`` writer behind
+``repartition(B, "bucket")`` (the ``commit_append`` layout) and once on
+the driver path (``toArrow()`` + one pyarrow file per bucket). Two row
+shapes:
+
+- ``vector`` (default): an id and a 64-double vector, a store row;
+- ``replay``: a CDC table row of strings and longs built from
+  ``change_events`` (key, commit, language, ~130-character content, its
+  sha256, order columns, op, residual props and two promoted props), a
+  replay commit's row.
+
+Per path it prints the median wall seconds, the fewest processes forked
+during one write, the files written and the Spark jobs run; the header
+line gives the input's optimizer size estimate, the size a lake write
+picks its writer by (``session.size_of``), the bytes of the collected
+Arrow table, and whether Hadoop's native library is loaded (without it
+the local file system forks a ``chmod`` per file it creates).
 
 Forks are read from the ``processes`` line of ``/proc/stat``: a count of
 every fork on the host, so other tenants add noise; the minimum over the
@@ -16,6 +25,7 @@ repeats is the estimate. Use it to re-measure
 ``session.DRIVER_WRITE_BYTES`` on another host:
 
     PYTHONPATH=. python tools/write_cost.py --buckets 32 --rows 25 --repeats 7
+    PYTHONPATH=. python tools/write_cost.py --shape replay --buckets 16 --rows 200000
 """
 
 from __future__ import annotations
@@ -46,12 +56,13 @@ def main() -> None:
     ap.add_argument("--rows", type=int, default=25)
     ap.add_argument("--repeats", type=int, default=7)
     ap.add_argument("--cores", type=int, default=3)
+    ap.add_argument("--shape", choices=("vector", "replay"), default="vector")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from embulk_input_mixpanel_spark.session import estimated_bytes, get_spark
+    from embulk_input_mixpanel_spark.session import estimated_bytes, get_spark, size_of
+    from embulk_input_mixpanel_spark.sources.genevents import change_events
     from embulk_input_mixpanel_spark.sources.lake import LakeTable, bucket_of
 
     spark = get_spark(
@@ -61,21 +72,33 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     root = tempfile.mkdtemp(prefix="write-cost-")
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("v", T.ArrayType(T.DoubleType())),
-    ])
-    table = LakeTable.create(spark, os.path.join(root, "t"), schema, num_buckets=args.buckets)
-    df = (
-        spark.range(args.rows)
-        .select("id", F.array(*[F.rand(i) for i in range(64)]).alias("v"))
-        .select(bucket_of(args.buckets, "id").alias("bucket"), "id", "v")
-        .localCheckpoint(eager=True)
-    )
+    if args.shape == "vector":
+        df = spark.range(args.rows).select(
+            bucket_of(args.buckets, "id").alias("bucket"), "id",
+            F.array(*[F.rand(i) for i in range(64)]).alias("v"),
+        )
+    else:
+        ev = change_events(spark, args.rows, n_repos=max(100, args.rows // 2000),
+                           paths_per_repo=500, seed=1)
+        df = ev.select(
+            bucket_of(args.buckets, "repo", "path").alias("bucket"),
+            "repo", "path", "commit", "lang", "content",
+            F.sha2("content", 256).alias("content_sha"),
+            "commit_seq", "event_seq", "event_id", "ts_ms", "source_partition",
+            F.col("props").alias("props_rest"), "op",
+            F.get_json_object("props", "$.size").alias("p_size"),
+            F.get_json_object("props", "$.mode").alias("p_mode"),
+        )
+    df = df.localCheckpoint(eager=True)
+    table = LakeTable.create(spark, os.path.join(root, "t"), df.drop("bucket").schema,
+                             num_buckets=args.buckets)
     print(json.dumps({
+        "shape": args.shape,
         "buckets": args.buckets,
         "rows": args.rows,
         "estimated_bytes": estimated_bytes(df),
+        "size_of": size_of(df),
+        "arrow_bytes": df.toArrow().nbytes,
         "hadoop_native": bool(
             spark._jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded()
         ),
